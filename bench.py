@@ -1689,9 +1689,10 @@ def main() -> None:
         "samples": {n: [round(x, 4) for x in s] for n, s in samples.items() if s},
         # train-once cache audit for the ANN family (same task): misses ==
         # number of samples that paid codebook/centroid training inside
-        # their measured time.  Expected steady state: 1 miss per cache
-        # (first pass trains, later passes hit) — anything else names a
-        # keying bug or an unexpected retrain as the slow-mode cause.
+        # their measured time.  The caches are cleared at every pass and
+        # before the noisy re-measures, so the expected steady state is
+        # misses == samples of the cache's queries — a hit names a stale
+        # memo leaking across a clear, a surplus miss a keying bug.
         "ann_cache_stats": _ann_cache_stats(),
         "sf": sf,
         "n_queries": len(timings),

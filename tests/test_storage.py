@@ -422,3 +422,153 @@ def test_hot_bucket_write_rolls_files_at_max_records(spark, table_dir, monkeypat
     out = read_table(spark, table_dir)
     assert out.count() == 100
     assert out.agg(F.min("v"), F.max("v")).first() == (2.0, 2.0)
+
+
+# ---------------------------------------------------------------------------
+# Single evaluation of the batch in the bucketed writers
+# ---------------------------------------------------------------------------
+
+
+def _growing_batch(spark, counter_path, first_rows, extra_rows):
+    """A one-partition Python DataSource whose first evaluation yields
+    ``first_rows`` and every later one ``first_rows + extra_rows`` — a live
+    source that changes between two reads.  The classes are local so they
+    ship to the Python workers by value."""
+    from pyspark.sql.datasource import DataSource, DataSourceReader
+
+    with open(counter_path, "w") as f:
+        f.write("0")
+
+    class Reader(DataSourceReader):
+        def read(self, partition):
+            with open(counter_path, "r+") as f:
+                n = int(f.read())
+                f.seek(0)
+                f.write(str(n + 1))
+                f.truncate()
+            yield from (first_rows if n == 0 else first_rows + extra_rows)
+
+    class GrowingBatch(DataSource):
+        @classmethod
+        def name(cls):
+            return "growing_batch"
+
+        def schema(self):
+            return "k long, v long"
+
+        def reader(self, schema):
+            return Reader()
+
+    spark.dataSource.register(GrowingBatch)
+    return spark.read.format("growing_batch").load()
+
+
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _split_keys(spark, n_buckets):
+    """(new key, stored key in another bucket) for a table of keys 0..199."""
+    b = {
+        r.k: r.b
+        for r in spark.range(1001)
+        .select(F.col("id").alias("k"), F.pmod(F.xxhash64("id"), F.lit(n_buckets)).alias("b"))
+        .collect()
+    }
+    new_key = 1000
+    stored = next(k for k in range(200) if b[k] != b[new_key])
+    return new_key, stored
+
+
+def test_merge_evaluates_batch_once_and_keeps_stored_rows(spark, table_dir):
+    """A bucket that shows up only in a second evaluation of the batch
+    must not be overwritten without its stored rows: the batch is read
+    once, so the extra key never reaches the table and every stored row
+    survives."""
+    base = spark.range(200).select(F.col("id").alias("k"), F.lit(0).cast("long").alias("v"))
+    path = os.path.join(table_dir, "t")
+    write_bucketed(base, path, ["k"], n_buckets=8)
+    new_key, stored = _split_keys(spark, 8)
+    reads = os.path.join(table_dir, "reads")
+    batch = _growing_batch(spark, reads, [(new_key, 1)], [(stored, 1)])
+    before = _persisted_rdd_ids(spark)
+    merge_into_bucketed(spark, path, batch, ["k"], order_by=["v"], n_buckets=8)
+    assert _persisted_rdd_ids(spark) == before
+    with open(reads) as f:
+        assert f.read() == "1", "the batch was read more than once"
+    got = {r.k: r.v for r in read_table(spark, path).collect()}
+    assert set(got) == set(range(200)) | {new_key}
+    assert got[new_key] == 1 and got[stored] == 0
+
+
+def test_insert_ignore_evaluates_batch_once_and_never_duplicates(spark, table_dir):
+    """The anti-join and the append read one evaluation of the batch, so a
+    stored key that a second evaluation would add is never appended."""
+    from ub_etl_spark.operators.storage import insert_ignore_into_bucketed
+
+    base = spark.range(200).select(F.col("id").alias("k"), F.lit(0).cast("long").alias("v"))
+    path = os.path.join(table_dir, "t")
+    write_bucketed(base, path, ["k"], n_buckets=8)
+    new_key, stored = _split_keys(spark, 8)
+    reads = os.path.join(table_dir, "reads")
+    batch = _growing_batch(spark, reads, [(new_key, 1)], [(stored, 1)])
+    before = _persisted_rdd_ids(spark)
+    insert_ignore_into_bucketed(spark, path, batch, ["k"], n_buckets=8)
+    assert _persisted_rdd_ids(spark) == before
+    with open(reads) as f:
+        assert f.read() == "1", "the batch was read more than once"
+    out = read_table(spark, path)
+    assert out.groupBy("k").count().filter(F.col("count") > 1).count() == 0
+    got = {r.k: r.v for r in out.collect()}
+    assert set(got) == set(range(200)) | {new_key}
+    assert got[stored] == 0
+
+
+@pytest.mark.parametrize("writer", ["merge", "insert_ignore"])
+def test_bucketed_writer_unpersists_batch_when_write_raises(
+    spark, table_dir, monkeypatch, writer
+):
+    from pyspark.errors import NumberFormatException
+
+    import ub_etl_spark.operators.storage as storage
+
+    base = spark.range(20).select(F.col("id").alias("k"), F.lit(0).cast("long").alias("v"))
+    write_bucketed(base, table_dir, ["k"], n_buckets=4)
+    upd = spark.range(5).select(F.col("id").alias("k"), F.lit(1).cast("long").alias("v"))
+    # an option the writer cannot parse: raises after the batch is persisted
+    monkeypatch.setattr(storage, "MAX_RECORDS_PER_BUCKET_FILE", "not-a-number")
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(NumberFormatException):
+        if writer == "merge":
+            storage.merge_into_bucketed(spark, table_dir, upd, ["k"], n_buckets=4)
+        else:
+            storage.insert_ignore_into_bucketed(spark, table_dir, upd, ["k"], n_buckets=4)
+    assert _persisted_rdd_ids(spark) == before
+
+
+def test_merged_buckets_plan_shuffles_once_per_side(spark, table_dir):
+    """The merge rewrite's plan: one Exchange on each input side of the
+    Union and none above it (the window and the one-file-per-bucket write
+    reuse the sides' bucket partitioning)."""
+    from ub_etl_spark.operators.storage import _bucketed_once, _merged_buckets
+
+    base = spark.range(100).select(F.col("id").alias("k"), F.lit(0).cast("long").alias("v"))
+    write_bucketed(base, table_dir, ["k"], n_buckets=4)
+    upd = spark.range(50, 150).select(F.col("id").alias("k"), F.lit(1).cast("long").alias("v"))
+    with _bucketed_once(upd, ["k"], 4) as (b, touched):
+        merged = _merged_buckets(spark, table_dir, b, touched, ["k"], ["v"])
+        lines = merged._jdf.queryExecution().executedPlan().toString().splitlines()
+    u = next(i for i, line in enumerate(lines) if line.lstrip(" :+-").startswith("Union"))
+    assert not any("Exchange" in line for line in lines[:u]), "\n".join(lines)
+    col = lines[u].index("Union")
+    second = next(i for i in range(u + 1, len(lines)) if lines[i][col:col + 3] == "+- ")
+    sides = [lines[u + 1:second], lines[second:]]
+    assert [sum("Exchange" in line for line in s) for s in sides] == [1, 1], "\n".join(lines)
+
+    merge_into_bucketed(spark, table_dir, upd, ["k"], order_by=["v"], n_buckets=4)
+    for name in os.listdir(table_dir):
+        if name.startswith(f"{BUCKET_COL}="):
+            files = [f for f in os.listdir(os.path.join(table_dir, name)) if f.endswith(".parquet")]
+            assert len(files) == 1, (name, files)
+    got = {r.k: r.v for r in read_table(spark, table_dir).collect()}
+    assert got == {k: int(k >= 50) for k in range(150)}

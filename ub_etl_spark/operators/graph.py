@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ub_etl_spark.session import tracked_persist
+
 
 def canonical_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
     """Distinct undirected edges as (u, v) with u < v, self-loops dropped."""
@@ -102,10 +104,10 @@ def count_triangles(edges: DataFrame, broadcast_adjacency: bool = True) -> DataF
     # Spark does not reuse common subtrees across joins within one plan,
     # so WITHOUT these persists the (possibly expensive) edge-build
     # lineage re-executes once per consumer — measured 2x on the
-    # co-purchase graph.  Left cached for this plan's execution (the
-    # hierarchy_flatten_paths convention); bench/test sessions clear
-    # caches between passes.
-    edges = edges.persist()
+    # co-purchase graph.  All four frames are tracked_persist()ed, so
+    # release_persisted() frees them once the caller has materialized
+    # the result.
+    edges = tracked_persist(edges)
     # r16 (guide §2.4 remove redundant work): deg feeds THREE consumers —
     # the du broadcast build, the dv broadcast build, and the stats agg —
     # and each broadcast build is its own job re-running the degree
@@ -118,7 +120,7 @@ def count_triangles(edges: DataFrame, broadcast_adjacency: bool = True) -> DataF
     # (5.02 -> 5.33 s): there deg has only the two broadcast consumers
     # and the eager materialization barrier costs more than the one
     # saved aggregate — three consumers is the break-even on this box.
-    deg = degrees(edges).persist()
+    deg = tracked_persist(degrees(edges))
     # degree tags broadcast: deg is |nodes|-sized (dim scale here; at
     # web scale drop the hint and let AQE pick the join side)
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
@@ -127,19 +129,19 @@ def count_triangles(edges: DataFrame, broadcast_adjacency: bool = True) -> DataF
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = tagged.select(
+    oriented = tracked_persist(tagged.select(
         F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("dst"),
-    ).persist()
+    ))
     # r16: adj feeds the a_adj AND b_adj broadcast builds — two jobs that
     # each re-ran the collect_list aggregate from the cached oriented
     # frame (the r15 single-aliased-broadcast restructure fails Spark's
     # ambiguous-self-join analysis; persisting the source frame achieves
     # the same single computation without aliasing).  Part of the
     # 5.24 -> 4.00 s win above.
-    adj = oriented.groupBy("src").agg(
+    adj = tracked_persist(oriented.groupBy("src").agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")
-    ).persist()
+    ))
     a_adj = adj.select(F.col("src").alias("src"), F.col("nbrs").alias("nbrs_a"))
     b_adj = adj.select(F.col("src").alias("dst"), F.col("nbrs").alias("nbrs_b"))
     if broadcast_adjacency:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ub_etl_spark.operators.dedup import build_dim
+from ub_etl_spark.session import tracked_persist
 
 # Explicit source schema (never inference at scale — SURVEY.md §1.3).
 # Mirrors the document read by insert_course_data
@@ -141,7 +142,8 @@ def normalize(courses: DataFrame) -> dict[str, DataFrame]:
     natural keys so re-running the pipeline over overlapping pages is a
     fixpoint (README.md:156-163 refresh contract).
     """
-    courses = courses.dropDuplicates(["id"]).cache()
+    # feeds all 13 tables; tracked, so release_persisted() frees it
+    courses = tracked_persist(courses.dropDuplicates(["id"]))
     cid = F.col("id").alias("course_id")
 
     # hub table: scalar + struct-access projection (A3;
