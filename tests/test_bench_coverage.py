@@ -1,5 +1,6 @@
-"""Every registered query must carry its own bench row (r3 verdict
-task 7): the HEADLINE list and the registry may not drift apart."""
+"""bench.py's gates and its printed line: the absolute-time gate and the
+zero-residue rule read cost notes from the registry; the driver line keeps
+its key set and fits the driver's capture window."""
 
 from __future__ import annotations
 
@@ -7,63 +8,32 @@ import importlib.util
 import os
 
 
-def _headline():
+def _bench():
     spec = importlib.util.spec_from_file_location(
         "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod.HEADLINE
-
-
-def test_headline_covers_registry_exactly():
-    from ub_etl_spark.registry import load_all
-
-    headline, registry = _headline(), load_all()
-    missing = sorted(set(registry) - set(headline))
-    stale = sorted(set(headline) - set(registry))
-    dupes = sorted({n for n in headline if headline.count(n) > 1})
-    assert not missing, f"registered queries without a bench row: {missing}"
-    assert not stale, f"bench rows for unregistered queries: {stale}"
-    assert not dupes, f"duplicate bench rows: {dupes}"
-
-
-def test_documented_exceptions_name_real_queries():
-    """The sanctioned->2x list must reference registered queries only, so
-    a rename can't silently orphan an exception entry."""
-    from ub_etl_spark.registry import load_all
-
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    registry = set(load_all())
-    stale = sorted(set(mod.DOCUMENTED_EXCEPTIONS) - registry)
-    assert not stale, f"exception entries for unregistered queries: {stale}"
-    stale_notes = sorted(set(mod.ABS_TIME_NOTES) - registry)
-    assert not stale_notes, f"abs-time notes for unregistered queries: {stale_notes}"
+    return mod
 
 
 def test_abs_time_gate_against_committed_sidecar():
     """Absolute-time gate (r5 verdict task 4), enforced each round against
     the committed sf0.1 bench_detail.json: every query over ABS_TIME_GATE_S
-    in the last full bench run must carry a DOCUMENTED_EXCEPTIONS or
-    ABS_TIME_NOTES cost story.  A query newly crossing the gate fails here
-    until someone measures it and writes the note."""
+    in the last full bench run must carry a cost_note on its @register.
+    A query newly crossing the gate fails here until someone measures it
+    and writes the note."""
     import json
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    from ub_etl_spark.registry import load_all
+
+    mod = _bench()
     detail_path = os.path.join(os.path.dirname(__file__), "..", "bench_detail.json")
     with open(detail_path) as fh:
         detail = json.load(fh)
     if detail.get("sf") != 0.1:  # only the full-scale sidecar is meaningful
         return
-    documented = set(mod.DOCUMENTED_EXCEPTIONS) | set(mod.ABS_TIME_NOTES)
+    documented = {n for n, spec in load_all().items() if spec.cost_note}
     undocumented = sorted(
         n
         for n, sec in detail["queries"].items()
@@ -82,15 +52,11 @@ def test_zero_residue_against_committed_sidecar():
     function bench.py's artifact emission uses (a query is explained by
     subfloor oracle, a documented exception, own floor-adjusted ratio < 2,
     or — small-oracle regime only: oracle under SMALL_ORACLE_FLOORS
-    job-floors — own time within the machinery cap or an ABS_TIME_NOTES
-    story), so the enforced rule cannot drift from the emitted one."""
+    job-floors — own time within the machinery cap or a cost_note), so the
+    enforced rule cannot drift from the emitted one."""
     import json
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = _bench()
     detail_path = os.path.join(os.path.dirname(__file__), "..", "bench_detail.json")
     with open(detail_path) as fh:
         detail = json.load(fh)
@@ -110,16 +76,17 @@ def test_residue_rule_paths_synthetic():
     measurement happens to contain.  Covers: subfloor oracle, own
     floor-adjusted ratio < 2, small-oracle within the machinery cap
     (including the MACHINERY_CAP_MIN_S flooring when the sampled floor is
-    low), small-oracle over the cap with an ABS_TIME_NOTES story, a
-    documented exception, and the two true-residue shapes (small-oracle
-    over cap without a story; big-oracle ratio >= 2)."""
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
+    low), small-oracle over the cap with a cost_note, a ratio exception,
+    and the two true-residue shapes (small-oracle over cap without a
+    story; big-oracle ratio >= 2)."""
+    from ub_etl_spark.registry import load_all
+
+    mod = _bench()
+    registry = load_all()
+    noted = next(
+        n for n, q in registry.items() if q.cost_note and not q.ratio_exception
     )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    noted = next(iter(set(mod.ABS_TIME_NOTES) - set(mod.DOCUMENTED_EXCEPTIONS)))
-    excepted = next(iter(set(mod.DOCUMENTED_EXCEPTIONS) - set(mod.ABS_TIME_NOTES)))
+    excepted = next(n for n, q in registry.items() if q.ratio_exception)
     floor = 0.05  # 14 * 0.05 = 0.7 < MACHINERY_CAP_MIN_S -> cap floors at 1.0
     cutoff, cap = mod.machinery_bounds(floor)
     assert cutoff == 0.2 and cap == mod.MACHINERY_CAP_MIN_S
@@ -152,11 +119,7 @@ def test_detail_sidecar_routing(tmp_path):
     written by a deliberate SPARK_GRAFT_BENCH_DETAIL run; an unadorned
     (driver-style) run routes to the round-stamped gitignored sidecar,
     with the previous round's stamped file as its delta base."""
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = _bench()
     here = str(tmp_path)
     # explicit env -> write and delta base are that path, verbatim
     assert mod.detail_sidecar_paths("/x/y.json", here) == ("/x/y.json", "/x/y.json")
@@ -180,91 +143,72 @@ def test_detail_sidecar_routing(tmp_path):
     assert os.path.basename(w) != "bench_detail.json"
 
 
-def test_rolling_aggregate_set_is_session_free():
-    """r13: the *_vs_rolling_floor aggregates exist to be comparable
-    across runs, so their query set must be a pure function of
-    ORACLE_FLOOR.json and the pinned ROLLING_CUT_S — never of one
-    session's floor sample (the session-cut set churned 26 queries
-    between the two r13 quiet-box runs and swung the emitted aggregate
-    1.28 -> 1.68 while the ratios agreed to 0.4%; see the spread
-    comment in bench.py).  Recomputes the committed sidecar's emitted
-    aggregate from the pinned constant and the sidecar's own rolling
-    floors: a regression to a session-dependent cut (or a silent cut
-    change) makes the recomputation disagree with what the run emitted."""
+def _synthetic_detail(n_queries: int, extra_conf: str | None) -> dict:
+    """A detail sidecar shaped like bench.py's, with synthetic values."""
+    queries = {f"q{i:03d}_synthetic_query": 0.1 + i / 100 for i in range(n_queries)}
+    return {
+        "metric": "headline_query_wall_clock_total",
+        "value": round(sum(queries.values()), 4),
+        "unit": "sec",
+        "sf": 0.1,
+        "n_queries": n_queries,
+        "cpus": 4,
+        "spark_job_floor_s": 0.07,
+        "oracle_total": 50.0,
+        "aggregate_ratio": 1.9,
+        "aggregate_ratio_excl_subfloor": 1.5,
+        "median_ratio_meaningful_oracle": 1.2,
+        "aggregate_ratio_excl_subfloor_and_exceptions": 1.1,
+        "sub_floor_queries": ["a", "b"],
+        "floor_adjacent_queries": ["c"],
+        "unexplained_over_2x_floor_adjusted": [],
+        "machine_state_per_pass": [{"load_avg_1m": 1.0}] * 3,
+        "over_abs_gate_undocumented": [],
+        "budget_truncated": [],
+        "delta_vs_prev": {n: 2.5 for n in list(queries)[:7]},
+        "median_delta_vs_prev": 1.0,
+        "queries": queries,
+        "extra_conf": extra_conf,
+    }
+
+
+def test_driver_line_fits_with_oversized_extra_conf():
+    """A conf override too long for the driver's window on its own: the
+    trim loop empties ``queries`` and must then shorten ``extra_conf``
+    rather than print a line the driver truncates to ``parsed: null``."""
     import json
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    detail_path = os.path.join(os.path.dirname(__file__), "..", "bench_detail.json")
-    with open(detail_path) as fh:
-        detail = json.load(fh)
-    if detail.get("sf") != 0.1:
-        return
-    timings, rolling = detail["queries"], detail["oracle_floor_rolling"]
-    above = [n for n in rolling if rolling[n] >= mod.ROLLING_CUT_S and n in timings]
-    assert above, "pinned cut selected no queries — cut or floors corrupt"
-    recomputed = round(
-        sum(timings[n] for n in above) / sum(rolling[n] for n in above), 2
-    )
-    emitted = detail["aggregate_ratio_excl_subfloor_vs_rolling_floor"]
-    assert recomputed == emitted, (
-        f"pinned-cut recomputation {recomputed} != emitted {emitted}: the "
-        "rolling aggregate's set is no longer the pinned-cut set"
-    )
+    mod = _bench()
+    out = mod.driver_line(_synthetic_detail(262, "k=" + "v" * 4998), "d.json")
+    parsed = json.loads(out)
+    assert len(out) <= 1940
+    assert parsed["queries"] == {}
+    assert parsed["extra_conf"].startswith("k=vvv")
+    assert parsed["n_queries"] == 262
 
 
-def test_rolling_floor_stamp_invalidation():
-    """r13 (r12 ADVICE): a stored floor survives only when ALL THREE
-    stamps match — oracle-SQL sha, DuckDB version, dataset fingerprint.
-    Any mismatch re-seeds from the session; matching entries ratchet
-    down; legacy entries (bare float / missing env stamps) adopt the
-    current stamps.  Exercises merge_rolling_floors directly so the
-    invalidation semantics can't silently regress."""
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    stored = {
-        "match": {"s": 0.5, "sha": "aaa", "duckdb": "v1", "data": "d1"},
-        "sql_changed": {"s": 0.5, "sha": "OLD", "duckdb": "v1", "data": "d1"},
-        "duck_changed": {"s": 0.5, "sha": "aaa", "duckdb": "v0", "data": "d1"},
-        "data_changed": {"s": 0.5, "sha": "aaa", "duckdb": "v1", "data": "d0"},
-        "legacy_float": 0.5,
-        "legacy_no_env": {"s": 0.5, "sha": "aaa"},
-        "legacy_no_sha": {"s": 0.5, "duckdb": "v1", "data": "d1"},
-        "legacy_data_fp": {"s": 0.5, "sha": "aaa", "duckdb": "v1", "data": "dOLD"},
-    }
-    session = {n: 1.0 for n in stored} | {"new_query": 1.0}
-    shas = {n: "aaa" for n in session}
-    rolling, new_stored = mod.merge_rolling_floors(
-        stored, session, shas, "v1", "d1", legacy_data_fps=("dOLD",)
-    )
-    # matching / legacy entries keep the faster stored floor (ratchet)
-    assert rolling["match"] == 0.5
-    assert rolling["legacy_float"] == 0.5
-    assert rolling["legacy_no_env"] == 0.5
-    # a dict entry missing the sha key adopts the current sha (ADVICE
-    # r13: absence means never-stamped, same as the env stamps)
-    assert rolling["legacy_no_sha"] == 0.5
-    # an entry stamped under a superseded fingerprint of the same bytes
-    # migrates (r14 formula change) instead of re-seeding
-    assert rolling["legacy_data_fp"] == 0.5
-    assert new_stored["legacy_data_fp"]["data"] == "d1"
-    # any stamp mismatch re-seeds from the session
-    assert rolling["sql_changed"] == 1.0
-    assert rolling["duck_changed"] == 1.0
-    assert rolling["data_changed"] == 1.0
-    # unseen queries seed from the session
-    assert rolling["new_query"] == 1.0
-    # everything written back carries the full current stamp set
-    for entry in new_stored.values():
-        assert entry.keys() == {"s", "sha", "duckdb", "data"}
-        assert entry["duckdb"] == "v1" and entry["data"] == "d1"
-    # and a session SLOWER than a valid floor never loosens it
-    rolling2, _ = mod.merge_rolling_floors(new_stored, {"match": 2.0},
-                                           {"match": "aaa"}, "v1", "d1")
-    assert rolling2["match"] == 0.5
+def test_driver_line_key_set_is_pinned():
+    """The printed line's keys are the driver-read contract; with a normal
+    detail the per-query map keeps the expensive head in descending
+    order."""
+    import json
+
+    keys = [
+        "metric", "value", "unit", "sf", "n_queries", "cpus",
+        "spark_job_floor_s", "oracle_total", "aggregate_ratio",
+        "aggregate_ratio_excl_subfloor", "median_ratio_meaningful_oracle",
+        "aggregate_ratio_excl_subfloor_and_exceptions", "n_subfloor",
+        "n_floor_adjacent", "n_unexplained_over_2x_floor_adj",
+        "load_avg_1m_per_pass", "n_over_abs_gate_undocumented",
+        "n_budget_truncated", "n_regressed_2x_vs_prev",
+        "median_delta_vs_prev", "queries", "detail_file",
+    ]
+    mod = _bench()
+    parsed = json.loads(mod.driver_line(_synthetic_detail(262, None), "d.json"))
+    assert list(parsed) == keys
+    conf = json.loads(mod.driver_line(_synthetic_detail(5, "a=b"), "d.json"))
+    assert list(conf) == keys + ["extra_conf"] and conf["extra_conf"] == "a=b"
+    secs = list(parsed["queries"].values())
+    assert secs and secs == sorted(secs, reverse=True)
+    assert max(secs) == 2.71  # the slowest synthetic query survives the trim
+    assert parsed["n_regressed_2x_vs_prev"] == 5  # capped at the worst five

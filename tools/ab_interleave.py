@@ -46,6 +46,12 @@ def main() -> None:
     registry = load_all()
     spark = get_spark("ab-interleave")
     spark.sparkContext.setLogLevel("ERROR")
+    # a static, unknown or misspelled key would otherwise raise from
+    # spark.conf.unset in the middle of a measurement, or be ignored
+    all_keys = sorted({k for conf in variants.values() for k in conf})
+    fixed = [k for k in all_keys if not spark.conf.isModifiable(k)]
+    if fixed:
+        sys.exit(f"conf keys not modifiable at runtime: {', '.join(fixed)}")
 
     def wait_quiet(limit_s: float = 600) -> None:
         t0 = time.time()
@@ -57,7 +63,6 @@ def main() -> None:
     # the session baseline for the UNION of all variant keys once, and
     # before each run set EVERY key in that union (variant value or the
     # baseline) instead of only the variant's own keys.
-    all_keys = sorted({k for conf in variants.values() for k in conf})
     baseline: dict[str, str | None] = {}
 
     def run(name: str, conf: dict[str, str]) -> float:

@@ -947,7 +947,7 @@ NOTES = """Notes on the flagged cells:
   at-or-under 2x floor-adjusted — the floor-dominance claim
   (PLANS.md) holds, so the bench's sf0.1 ratios for small-oracle
   queries are machinery arithmetic, not plan defects.  Both held-weak
-  entries heal and their flags are RETIRED (bench.py ABS_TIME_NOTES
+  entries heal and their flags are RETIRED (their @register cost_note
   cites this table): `text_tfidf` 1.92 floor-adjusted at sf1 (vs ~4.5x
   at sf0.1 — the 3-stage tokenize/tf-agg/df-join plan amortizes
   exactly as its note claims) and `window_analytic` 1.35 (vs ~2.4-2.9x
@@ -1052,7 +1052,7 @@ NOTES = """Notes on the flagged cells:
   amplification, so hop-round count is constant and the cell isolates
   the edge-build scan — the only corpus-sized term.  A ~linear ratio
   certifies the per-round job floors are a constant, matching the
-  ABS_TIME_NOTES claim that bench-scale cost is iteration machinery.
+  cost_note claim that bench-scale cost is iteration machinery.
 - `pq_adc_scan_10q` (r7): the shipped fused encode+ADC PQ query with a
   fixed 10-query probe set (the knn_exact_10q convention).  Corpus-
   linear is the design claim: the single Arrow pass is the only term
@@ -1174,9 +1174,8 @@ NOTES = """Notes on the flagged cells:
   23.5x / gapfill 36.4x: the merged-stream window sort is the whole
   cost, no rework indicated.
 - `tfidf_score` / `keyphrase_topk` / `hybrid_rrf_3q` (r10): the text /
-  search shapes whose bench ratios are sanctioned by
-  DOCUMENTED_EXCEPTIONS / ABS_TIME_NOTES stories claiming corpus
-  linearity — measured so the claims carry numbers.  Against the
+  search shapes whose bench ratios are sanctioned by cost_note
+  stories claiming corpus linearity — measured so the claims carry numbers.  Against the
   ~15.5x byte-linear mark (10 copies x 1.55x salt-token inflation):
   tf-idf 4.1x@10x (tokenize + tf agg + pruned two-phase distinct df +
   term join), keyphrase 5.1x (same tree + per-doc WindowGroupLimit),

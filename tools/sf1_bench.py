@@ -104,8 +104,8 @@ ROWS_ONLY_SF1 = [
 ]
 # r13 verdict task 4: every BENCH over-abs-gate (>1.5 s at sf0.1) query
 # carries an sf1 row measured on the shipped plan, so each
-# absolute-cost disposition in bench.py's ABS_TIME_NOTES /
-# DOCUMENTED_EXCEPTIONS cites a same-plan sf1 number.  This is the
+# absolute-cost disposition in its @register cost_note cites a
+# same-plan sf1 number.  This is the
 # union of the r12/r13-era over-gate sets not already in the lists
 # above (the gate set breathes a little run-to-run as queries cross
 # 1.5 s under load, hence union).

@@ -89,20 +89,12 @@ def _bucketed_once(
         b.unpersist()
 
 
-# r15 verdict task 6 (guide §5 spill / §6 file sizing): keying the write
-# exchange on the bucket column puts each bucket in ONE task — correct at
-# bench scale, but at 100 TB a hot bucket would become one multi-GB
-# single-task FILE with nothing bounding it.  maxRecordsPerFile makes the
-# writer roll to a new file past the cap (same task, same directory), so
-# the worst case is bounded file sizes at the cost of extra files only in
-# the buckets that actually overflow.  Env-tunable for deployments whose
-# row width differs; the default (5M rows ~ a few hundred MB of typical
-# fact rows) never fires at bench scale, so the bench layout — exactly
-# one file per touched directory — is unchanged (asserted in
-# tests/test_storage.py).
-MAX_RECORDS_PER_BUCKET_FILE = int(
-    os.environ.get("SPARK_GRAFT_MAX_RECORDS_PER_FILE", 5_000_000)
-)
+# Keying the write exchange on the bucket column puts each bucket in ONE
+# task, so at scale a hot bucket would become one unbounded single-task
+# file.  maxRecordsPerFile rolls the writer to a new file past the cap,
+# which keeps that file bounded; 5M rows never fires at bench scale, so
+# the layout stays one file per touched directory (tests/test_storage.py).
+MAX_RECORDS_PER_BUCKET_FILE = 5_000_000
 
 
 def write_bucketed(df: DataFrame, path: str, keys: Sequence[str], n_buckets: int = 64) -> None:

@@ -264,6 +264,15 @@ def quantile_bucket_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quantile_bucket_equidepth_2phase",
     tier="B",
     oracle=_EQUIDEPTH_ORACLE,
+    cost_note=(
+        "the registered scale form of quantile_bucket_equidepth: "
+        "range-partition sampling + local seq + stats-frame agg + broadcast "
+        "offsets = 3-4 chained jobs whose per-stage floors dominate at bench "
+        "scale (~1.8 s warm vs the windowed form's 0.65 s; oracle is "
+        "sub-floor). The shape is the point: the windowed form is Exchange "
+        "SinglePartition on the fact; the trade is 3.15 s vs 36.8 s at 100x "
+        "(SCALING.md equidepth_ntile_2phase 4.9x vs 111x windowed)"
+    ),
 )
 def quantile_bucket_equidepth_2phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact equi-depth deciles WITHOUT the global-sort collapse — the
@@ -681,6 +690,15 @@ def agg_ks_test_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM v, bounds
     GROUP BY lo, hi
     """,
+    cost_note=(
+        "two-phase distributed selection (quantile_disc_two_phase: coarse "
+        "bucket agg + spine walk + broadcast-targeted fine pass + final agg) "
+        "= several chained jobs whose per-stage floors dominate at bench "
+        "scale; samples hover at the gate (1.37-1.58 s). The shape is the "
+        "point: the one-window textbook form is Exchange SinglePartition on "
+        "the fact, the scale hazard SCALING.md's quantile_disc_2phase cell "
+        "(2.4x@100x) certifies this plan avoids"
+    ),
 )
 def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized mean of order value (5%/95% clamp) — the outlier-
@@ -746,6 +764,16 @@ _GRID_R = 4.0  # distance threshold == cell width (one-ring adjacency covers)
      AND (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
          <= {_GRID_R} * {_GRID_R}
     """,
+    cost_note=(
+        "real distance-pair work: the qualifying set is ~27M pairs (13.5% of "
+        "all pairs: r=4 on an effectively-1D strip), so both engines are "
+        "output-bound; the equi-join grid plan runs 3-7x faster than the "
+        "O(n^2) oracle. The oracle side is the bench's biggest noise source: "
+        "DuckDB's 27M-row fetchall swings 20-67 s across sessions (66.8 s in "
+        "one run, 27.3 s min-of-3 in another), moving aggregate_ratio by ~1x "
+        "on its own; read the aggregate with the floor/exception "
+        "decomposition, not raw. SCALING.md cell 6.6x@100x"
+    ),
 )
 def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2D grid-bucketed distance join: all point pairs within distance r

@@ -82,6 +82,26 @@ def events_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM counted
     ) WHERE rn <= 3
     """,
+    cost_note=(
+        "basket-bounded pair counts via one vectorized Arrow pass that "
+        "pre-aggregates inside the worker (buffered np.unique drain: sf1 17.6 "
+        "s -> 8.3 s, sf0.1 4.1 s -> ~3.0-3.6 s; the exchange moves counts, "
+        "never pair instances), no self-join: the join form measured 15.8 s "
+        "at sf1, and a repartition+sortWithinPartitions worker-grouping "
+        "kernel 11.8 vs 8.8 s same-session (the sort costs more than the "
+        "collect_set agg it replaces). The sf1 residual is the basket "
+        "exchange (3.1 s) plus a count exchange that key-shifted "
+        "amplification keeps near pair-instance cardinality; the oracle keeps "
+        "the join form in-process. Measured non-change: fusing the count "
+        "exchange into the window's part_a exchange (6 -> 4 exchanges, "
+        "bit-equal output) read 7.4 vs 6.0 s min-of-3 same-session at sf1; "
+        "per-worker kernel and agg/sort work is the bottleneck, not the "
+        "exchanges, and it is already one vectorized np.unique over packed "
+        "int64 keys. The remaining sf1 gap is single-node constant factor; "
+        "SCALING.md 8.5x@100x (sub-linear). Boundedness measured by "
+        "orders_lines_per_order_hist"
+    ),
+    ratio_exception=True,
 )
 def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence (top-3 'bought with' partners per
@@ -105,8 +125,8 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exchange fusion via repartition(part_a): 6 -> 4 exchanges but
     7.4s vs 6.0s same-session sf1 min-of-3) — the sf1 residual is
     worker-side kernel+agg constant factor on an already-minimal plan,
-    not a shuffle or growth term; full disposition in bench.py
-    ABS_TIME_NOTES, scale evidence in the 100x SCALING cell."""
+    not a shuffle or growth term; full disposition in the
+    cost_note above, scale evidence in the 100x SCALING cell."""
     from ub_etl_spark.operators.selection import basket_pair_counts_arrow
 
     li = T(spark, sf_dir, "lineitem")
@@ -192,6 +212,21 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sized sb ON o.id_b = sb.doc_id
     WHERE CAST(o.n_shared AS DOUBLE) / LEAST(sa.n_grams, sb.n_grams) >= 0.8
     """,
+    cost_note=(
+        "4-shuffle inverted-index pipeline (gram distinct, sized agg, gram "
+        "self-join, overlap agg). Grams are re-keyed by xxhash64 before the "
+        "distinct and the hashed frame is persisted for its three consumers: "
+        "sf1 same-session 9.0-11.0 s -> 3.3 s, sidecar 10.2 s -> 4.1 s (15.9x "
+        "-> 6.3x floor-adjusted; collision budget in the docstring). At sf0.1 "
+        "the lever is a wash: a cold single-query session measured the "
+        "hashed+persist form ~1.3-1.7x off the string form (persist "
+        "materialization is floor-priced there), while a quiet-box suite pass "
+        "read 1.71 s vs 1.63 s (~1.05x). The registered form is the scale "
+        "form, same policy as equidepth_2phase / episodes_arrow. The plan is "
+        "the LSH-family probe shape, never all-pairs, and linear in "
+        "SCALING.md"
+    ),
+    ratio_exception=True,
 )
 def text_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment dedup: |grams(A) ∩ grams(B)| / min(|grams(A)|,
@@ -303,7 +338,26 @@ def text_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the twin's row re-measured --fresh on its shipped composite-key
 # plan, r13) — absolutely faster at every measured scale (SCALING.md
 # containment_banded 8.3x@10x cell for the growth story).
-@register("text_containment_banded", tier="B", oracle=None)
+@register(
+    "text_containment_banded",
+    tier="B",
+    oracle=None,
+    cost_note=(
+        "rows-only (no oracle; recall 1.0 vs the exact registered form pinned "
+        "in BOUNDS.json at sf0.01 and sf0.1, plus a deterministic "
+        "size-skew-limitation fixture test): same stage decomposition as "
+        "dedup_minhash_lsh, gram explode -> 16-perm minhash signature agg "
+        "(persisted, tracked) -> 8-band bucket self-join for candidates -> "
+        "exact per-pair containment verify on candidates only, never "
+        "all-pairs. The persisted signature aggregate plus the band join are "
+        "the absolute cost at sf0.1 (~1.85 s); per-band stage floors dominate "
+        "on a 580KB corpus. Scale story: SCALING.md containment_banded "
+        "8.3x@10x on a byte-dominated small cell, and absolutely faster than "
+        "the exact inverted-index twin at both measured scales; the banding "
+        "bounds candidates at corpus scale, which bench-scale stage machinery "
+        "cannot show"
+    ),
+)
 def text_containment_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ub_etl_spark.operators.dedup import containment_banded_pairs
 
@@ -932,6 +986,13 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY lift DESC, part_a, part_b
     LIMIT 50
     """,
+    cost_note=(
+        "embeds the same Arrow pre-agg pair-count kernel as "
+        "market_basket_pairs (counts through the exchange, never pair "
+        "instances) over one persisted basket_arrays shuffle that also feeds "
+        "supports + basket count"
+    ),
+    ratio_exception=True,
 )
 def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association-rule mining metrics over co-purchase pairs: lift

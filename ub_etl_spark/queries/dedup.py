@@ -135,7 +135,19 @@ def dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # xxhash64 seeds have no portable oracle).  Operating point bands=8 x
 # rows_per=2: measured recall 1.0 vs exact Jaccard@0.5 at this setting,
 # pinned >= 0.9 in tests/test_dedup.py.
-@register("dedup_minhash_lsh", tier="B", oracle=None)
+@register(
+    "dedup_minhash_lsh",
+    tier="B",
+    oracle=None,
+    cost_note=(
+        "rows-only (no oracle): shingle -> 64-perm minhash signature -> "
+        "banded bucket self-join + candidate-only Jaccard verify, with the "
+        "shingle/signature frames persisted for the two band consumers "
+        "(operators/dedup.py _REUSE); never all-pairs, recall 1.0 pinned in "
+        "BOUNDS.json, 1.2x@10x in SCALING.md; the cost is the signature "
+        "build, linear in corpus bytes"
+    ),
+)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents")
     return D.minhash_lsh_pairs(docs, "doc_id", "text", n=3, num_perm=16, bands=8, threshold=0.25)
@@ -146,7 +158,19 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # = 7, so the threshold must not exceed 7 (a distance-8 pair can differ in
 # every chunk and never co-bucket); measured recall 0.96 vs exact
 # Jaccard@0.5 at this point, pinned >= 0.9 in tests/test_dedup.py.
-@register("dedup_simhash", tier="B", oracle=None)
+@register(
+    "dedup_simhash",
+    tier="B",
+    oracle=None,
+    cost_note=(
+        "rows-only (no oracle): 64-bit simhash (collect_set hash sets + one "
+        "Arrow bit-sum/sign-pack pass, instead of a 64-column sum aggregate "
+        "behind a string-dedup exchange) + 8-chunk pigeonhole block join + "
+        "hamming verify on candidates only (precision/recall pinned in "
+        "BOUNDS.json); cost is the signature build, linear in corpus bytes. "
+        "2.97 s -> ~1.6 s min-of-3 from the Arrow pass"
+    ),
+)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents")
     return D.simhash_pairs(docs, "doc_id", "text", max_hamming=7, n_chunks=8)
@@ -206,6 +230,13 @@ def _cc_inputs(spark: SparkSession, sf_dir: str):
            (id = MIN(label)) AS is_canonical
     FROM reach GROUP BY id
     """,
+    cost_note=(
+        "iterative connected components: O(log n) label-propagation rounds, "
+        "each a Spark job; iteration machinery dominates at bench scale; "
+        "raced on a diameter-120 chain in tests; dedup_cluster_cc_star is the "
+        "2-round large/small-star twin"
+    ),
+    ratio_exception=True,
 )
 def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs, pairs = _cc_inputs(spark, sf_dir)
@@ -224,6 +255,12 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_cluster_cc_star",
     tier="B",
     oracle=REGISTRY["dedup_cluster_cc"].oracle,
+    cost_note=(
+        "large-star/small-star CC: 2 fixed label-propagation rounds, each a "
+        "keyed agg job + convergence check; iteration machinery at bench "
+        "scale; O(log n) rounds independent of diameter at 100TB (raced on a "
+        "diameter-120 chain in tests)"
+    ),
 )
 def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs, pairs = _cc_inputs(spark, sf_dir)
@@ -272,6 +309,25 @@ def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM grp
     GROUP BY doc_id, g
     """,
+    cost_note=(
+        "exact-substring span dedup (Lee et al. 2022) is a 2-pass exact plan "
+        "by design: pass 1 hashes every token offset's k=20-gram (map-only, "
+        "0.34 s at sf0.1) and keeps hashes seen in >=2 distinct docs (hash "
+        "agg + broadcast semi probe; cumulative 1.05 s), pass 2 "
+        "re-materializes candidate k-gram strings and re-verifies on them "
+        "(collision-free exact), then the interval-union span fold: 2.0-2.5 s "
+        "full under load ~4, 1.38 s quiet min-of-6, vs one single-node DuckDB "
+        "pass (oracle ~0.9 s). Measured non-changes: a single-pass "
+        "groupBy(h)+collect_list(struct(doc_id,pos)) that avoids recomputing "
+        "pass 1 for the probe read 2.12 vs 2.04 s same-session min-of-5 (the "
+        "struct payload exchange + per-hash array build costs what the "
+        "recomputed 0.34 s map pass costs, and a hot boilerplate k-gram at "
+        "100 TB would land all its (doc,pos) rows in one task where the "
+        "shipped countDistinct form spreads (h,doc) partials); scan fan-out "
+        "2.42 vs 1.83 s; persisting the exploded corpus rejected (caching "
+        "n_tokens rows does not survive 1000 executors). Residue = per-stage "
+        "floors of the 5-job chain at bench scale"
+    ),
 )
 def dedup_substring_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents")

@@ -279,6 +279,11 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
     """,
+    cost_note=(
+        "NTILE + cume_dist/percent_rank keyed windows + dist agg = 2 keyed "
+        "sorts; 0.54 s absolute, oracle 0.19 s"
+    ),
+    ratio_exception=True,
 )
 def window_ntile_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
@@ -353,6 +358,13 @@ def agg_stats_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_orderkey, l_linenumber, label
     FROM lineitem JOIN dim ON l_returnflag = flag
     """,
+    cost_note=(
+        "deliberate skew machinery on a uniform bench table: salt explode + "
+        "two-phase de-salt agg add an exchange the plain join never pays; the "
+        "oracle runs the unsalted single-node form. The plan exists to pin "
+        "the skew-mitigation shape (agg_skew_salted shares the story)"
+    ),
+    ratio_exception=True,
 )
 def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ub_etl_spark.operators.skew import salted_join
@@ -891,6 +903,12 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS distinct_types_so_far
     FROM firsts
     """,
+    cost_note=(
+        "expanding COUNT DISTINCT rewrite: first-seen ranking window + "
+        "cumulative sum window = 2 keyed exchanges (no native frame can "
+        "express it); 0.58 s absolute, oracle 0.18 s"
+    ),
+    ratio_exception=True,
 )
 def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running DISTINCT count per user (how many distinct event types

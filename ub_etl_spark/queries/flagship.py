@@ -258,6 +258,13 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY numwait DESC, s.s_name
     LIMIT 100
     """,
+    cost_note=(
+        "the heaviest TPC-H shape kept: 4-way join + EXISTS semi + NOT EXISTS "
+        "anti over lineitem x3 = 5-6 stages; 0.97 s absolute vs DuckDB 0.18 s "
+        "single-node; stages scale out while the oracle's advantage is "
+        "bench-size constant factors"
+    ),
+    ratio_exception=True,
 )
 def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 (suppliers who kept orders waiting) — the multi-self-join

@@ -48,6 +48,17 @@ from ub_etl_spark.sources.tables import load_table as T
              / (SELECT SUM(d * (d - 1) / 2) FROM deg) AS global_cc
     FROM tri
     """,
+    cost_note=(
+        "degree-oriented wedge join is O(m^1.5) and linear at 10x "
+        "(SCALING.md); single-node DuckDB wins constant factors at bench "
+        "scale. This query is the bench's clearest external-noise tracer: "
+        "same-session controlled runs swing 2.6-9.2 s with host load "
+        "(load-avg ~6 from outside this process tree), while a 30-query "
+        "polluted-session experiment inflated it only 1.24x. Read its deltas "
+        "against the sidecar's machine_state_per_pass (load_avg_1m per pass), "
+        "not as plan changes"
+    ),
+    ratio_exception=True,
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count + global clustering coefficient of the part
@@ -96,6 +107,14 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation n LEFT JOIN best ON n.n_nationkey = best.node
     ORDER BY n.n_nationkey
     """,
+    cost_note=(
+        "level-synchronous BFS: the edge build (3-join distinct pass over "
+        "lineitem) plus one frontier-join job per hop until the frontier "
+        "empties, multiple jobs by construction, same class as "
+        "dedup_cluster_cc; faster than its recursive-CTE oracle (1.61 s vs "
+        "1.95 s), and rounds are bounded by graph diameter (2-3 on the dense "
+        "trade graph), not corpus size; see the SCALING.md cell"
+    ),
 )
 def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hop distance from nation 0 to every nation over the undirected
@@ -172,6 +191,31 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY jaccard DESC, x, y
     LIMIT 50
     """,
+    cost_note=(
+        "Closed. The cost is the probe-seeded wedge aggregate, O(|probes| x "
+        "deg^2): ~2.8M wedge instances over ~2.06M distinct pairs through a "
+        "partial+final agg, work both engines pay (sf0.1 decomposition: edge "
+        "build 0.93 s, wedge join+agg 4.17 s cumulative, full query 5.0-5.8 "
+        "s); the oracle's flat join wins single-node constant factors. In the "
+        "plan already: edges come from the Arrow pair-count pass (distinct "
+        "pairs through the exchange; sf1 edge build 18.6 s -> 7.1 s) and a "
+        "broadcast semi filter drops probe-disjoint wedge centers map-side "
+        "(sf1 17.9 s -> 13.7 s). Six levers rejected: (1) a p99 "
+        "degree cap read 17.6 vs 12.6 s at sf1, since the co-purchase graph "
+        "has no hubs (degree p50 119, p99 182, max 222) and the cap perturbs "
+        "6 of the true top-50; (2) the Arrow pair-count kernel for the wedge "
+        "read 13.6-14.0 vs 4.4-7.1 s, since wedge instances barely outnumber "
+        "distinct pairs and there is nothing to pre-combine; (3) fusing the "
+        "edge build's count aggregate away shuffles the same bytes, so there "
+        "is no win to measure; (4) "
+        "packed single-long pair keys read 5.22 vs 5.40 s, inside noise, and "
+        "add a 32-bit id precondition; (5) F.broadcast on the anti-join side "
+        "read 5.75 vs 5.82 s, since AQE already plans it and the hint pins an "
+        "|E|-scale broadcast hazard; (6) persisting deg read 5.33 vs 5.02 s, "
+        "worse with only two consumers. The one lever left is an approximate "
+        "or banded variant, which is a new feature and out of scope"
+    ),
+    ratio_exception=True,
 )
 def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction by neighbor-set Jaccard for a BOUNDED probe set

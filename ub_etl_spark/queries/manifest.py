@@ -101,6 +101,14 @@ from ub_etl_spark.sources.tables import load_table as T
       AND {sql_mix_bucket("d.doc_id", "1000003*(CAST(substr(d.source, 4) AS INT)+1)", 100)}
           < 100 - CAST(substr(d.source, 4) AS INT) * 5
     """,
+    cost_note=(
+        "deliberately composes three curation stages (gopher gate, "
+        "normalized-exact dedup, contamination check) plus mix+split into one "
+        "Catalyst plan; its cost is the sum of its stages' sanctioned "
+        "constants on the same 580KB corpus, and each stage's standalone twin "
+        "carries its own measured rationale"
+    ),
+    ratio_exception=True,
 )
 def pipeline_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus manifest: Gopher quality gate -> normalized-exact

@@ -474,7 +474,18 @@ def _pagerank_oracle() -> str:
     )
 
 
-@register("graph_pagerank_trade", tier="B", oracle=_pagerank_oracle())
+@register(
+    "graph_pagerank_trade",
+    tier="B",
+    oracle=_pagerank_oracle(),
+    cost_note=(
+        "5 fixed power iterations = 5 chained Spark jobs over a 25-node "
+        "graph: cost is iterations x per-job floor at bench scale; the "
+        "join+agg dataflow per iteration is the GraphX/Pregel scale shape and "
+        "the edge list is persisted"
+    ),
+    ratio_exception=True,
+)
 def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the nation-level trade graph (edge weight =
     exact revenue customer-nation -> supplier-nation), 5 fixed power

@@ -124,7 +124,18 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the pHash rides a mapInPandas decode stub with no SQL twin);
 # completeness of the banding vs brute-force Hamming is pinned in
 # tests/test_dedup.py.
-@register("multimodal_phash_dedup", tier="B")
+@register(
+    "multimodal_phash_dedup",
+    tier="B",
+    cost_note=(
+        "mapInPandas aHash + 8-chunk pigeonhole self-join + verify + dedup + "
+        "sort = 5 stages; controlled warm min is 0.9-1.3 s, and a 1.78 s "
+        "min-of-3 rode passes at load 2.1-2.5 (machine_state_per_pass, the "
+        "external-load class). The hasher is vectorized bit-identically "
+        "(neutral at 2k docs; it matters at real batch sizes). SCALING "
+        "phash_hamming cell is linear"
+    ),
+)
 def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate media detection by perceptual hash: aHash each
     payload (operators/multimodal.phash_media — decode stubbed, hashing

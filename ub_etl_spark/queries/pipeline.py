@@ -112,6 +112,20 @@ _FIXTURE = [_C101, _C102, dict(_C101)]
       ('course_subcategories',102, 'Databases')
     ) AS t(tbl, course_id, item)
     """,
+    cost_note=(
+        "13 normalized dimension/bridge outputs in one union plan; the oracle "
+        "emits a literal result set. Decomposition: plan construction "
+        "0.65-0.75 s warm (normalize()'s 13 eagerly-analyzed table builds "
+        "0.3-0.4 s + 13 shaped projections 0.18 s + 12 unions 0.13 s, the "
+        "declarative-API driver-side cost that is the A-tier proof) + "
+        "execution 1.75 s across 35 AQE stage-jobs (~50 ms each, already "
+        "overlapping). Measured non-change: materializing the 13 branches "
+        "from a 3-thread pool read 1.99 s, 6-thread 1.73 s, union coalesce(1) "
+        "1.76 s vs baseline 1.79 s min-of-5 rotated; AQE already materializes "
+        "independent branch stages concurrently, so a driver thread pool "
+        "re-buys existing overlap (parity 26/26 rows on all variants). A "
+        "tree-shaped union equals a chained union at n=13 (0.12 s both)"
+    ),
 )
 def pipeline_course_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The fixture enters as a from_json LocalRelation, NOT createDataFrame:

@@ -344,6 +344,16 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
            LEAD(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS next_price
     FROM orders
     """,
+    cost_note=(
+        "canonical minimal plan: one exchange by o_custkey + one sort + one "
+        "WindowExec computing all three functions (shared window spec), then "
+        "materializing the full 150k-row table through the noop sink; nothing "
+        "to shave. Quiet-box warm min-of-3: 0.42 s vs oracle 0.146 s; the "
+        "floor-adjusted ratio (~2.4) is row-materialization + scheduling "
+        "machinery on a full-table window. At sf1 it reads 1.35 "
+        "floor-adjusted (SCALING.md sf1 ratio table: 2.75 s vs oracle 1.97 s "
+        "at 10x the rows), under the 2x gate: the machinery amortizes"
+    ),
 )
 def window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -580,6 +590,12 @@ def scalar_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(l_partkey) AS max_part
     FROM lineitem GROUP BY l_orderkey
     """,
+    cost_note=(
+        "collect_list agg builds per-order arrays, then array/map HOF chain + "
+        "re-agg = 2 shuffles around a Python-free HOF projection; 0.85 s "
+        "absolute, oracle 0.29 s single-node"
+    ),
+    ratio_exception=True,
 )
 def array_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = T(spark, sf_dir, "lineitem")

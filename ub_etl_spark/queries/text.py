@@ -67,6 +67,26 @@ def text_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
              / 1000000 AS tfidf
     FROM tf JOIN df USING (term) CROSS JOIN n
     """,
+    cost_note=(
+        "3-scan/3-stage pipeline on a 580KB corpus: tokenize-explode + tf "
+        "hash agg (exchange 1), df branch (Catalyst prunes it to a two-phase "
+        "distinct: exchange 2), term join (AQE broadcasts the vocab side at "
+        "bench scale) + broadcast n_docs count job, vs one single-node DuckDB "
+        "pass (0.166 s). Quiet-box warm min-of-3: 0.74 s. Measured "
+        "non-changes: df via a window over term 0.85 s (the full sort by term "
+        "costs more than the exchange it saves); explicit broadcast(df) "
+        "neutral (AQE already picks BHJ); tf persist 1.1-1.4x slower "
+        "(docstring); HOF-index run-length tf pathological (>150 s: "
+        "CollapseProject re-inlines array_sort(split()) into each lambda "
+        "element, O(L^2) re-sorts per doc); "
+        "explode(array_distinct)+filter-count 1.21 vs 0.61 s same-run (the "
+        "O(L*U) per-doc filter work costs more than the (doc_id,term) "
+        "exchange it removes). Per-stage scheduling latency is the residue; "
+        "the plan is linear in corpus bytes and the join never exceeds vocab "
+        "size. At sf1 it reads 1.92 floor-adjusted (SCALING.md sf1 ratio "
+        "table: 2.23 s vs oracle 1.11 s at 10x the corpus), under the 2x "
+        "gate, so the bench-scale ratio is floor arithmetic"
+    ),
 )
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
@@ -104,7 +124,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (no re-split) but is 1.21s vs 0.61s same-run warm min-of-3 — the
     # O(L*U) per-doc filter work exceeds the exchange it removes.  The
     # registered 3-stage plan stands; its bench cost story lives in
-    # bench.py ABS_TIME_NOTES (small-oracle regime).
+    # its @register cost_note (small-oracle regime).
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     return (
@@ -276,6 +296,15 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c_ab >= 5
     ORDER BY pmi DESC, w1, w2 LIMIT 100
     """,
+    cost_note=(
+        "three aggregations over one tokenized scan (bigram counts via "
+        "map-side slide, unigram counts, scalar totals) + two word joins (AQE "
+        "broadcasts the vocab side) + min-support top-100 on a 580KB corpus: "
+        "4-5 chained stages whose scheduling latency dominates against a "
+        "~0.08 s single-node pass; 0.79 s quiet. Linear in corpus bytes; "
+        "vocab joins stay broadcast-bounded while the vocabulary fits, "
+        "co-keyed beyond"
+    ),
 )
 def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
@@ -487,6 +516,13 @@ _BM25_TERMS = ["data", "join", "stream"]
     ORDER BY bm25 DESC, doc_id
     LIMIT 50
     """,
+    cost_note=(
+        "tf/df build + per-term idf join + per-doc score agg = 3 shuffles on "
+        "a 580KB corpus; per-stage scheduling latency dominates (oracle 0.08 "
+        "s); the plan is the inverted-index probe shape, linear in corpus "
+        "bytes. Min-of-3: 0.70 s steady; a 1.54 s / 2.14x sample was "
+        "first-run codegen noise, not a plan change"
+    ),
 )
 def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     k1, b = 1.2, 0.75
@@ -691,6 +727,14 @@ def text_zipf_rank_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored
     ) WHERE rk <= 3
     """,
+    cost_note=(
+        "text_tfidf's exact expression tree (tokenize + tf agg + pruned "
+        "two-phase distinct df + term join) plus a per-doc WindowGroupLimit "
+        "top-3, one more keyed stage on top of the tf-idf shape (see "
+        "text_tfidf's cost_note); 0.85-1.03 s vs a 0.12-0.13 s oracle. State "
+        "is bounded by per-doc vocabulary; the rank exchange reuses the tf "
+        "keying"
+    ),
 )
 def text_keyphrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyphrase extraction: the top-3 tf-idf terms per document — the

@@ -34,6 +34,11 @@ from ub_etl_spark.sources.tables import load_table as T
                AS total_disc
     FROM lineitem GROUP BY l_returnflag
     """,
+    cost_note=(
+        "pandas_udf API-surface proof: Arrow round-trip cost; the scalar "
+        "codegen twin is scalar_math_case"
+    ),
+    ratio_exception=True,
 )
 def udf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
@@ -64,6 +69,11 @@ def udf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
                               ORDER BY o_totalprice, o_orderkey) AS rn
     FROM orders
     """,
+    cost_note=(
+        "applyInPandas grouped-map API-surface proof; the codegen twin is "
+        "window_rank/window_analytic"
+    ),
+    ratio_exception=True,
 )
 def udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     def rank_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -86,6 +96,11 @@ def udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id, user_id, value, floor(value / 10) * 10 AS value_bucket
     FROM events WHERE value > 100
     """,
+    cost_note=(
+        "mapInPandas API-surface proof; the codegen twin is scan_parquet "
+        "projection"
+    ),
+    ratio_exception=True,
 )
 def udf_map_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
@@ -167,6 +182,12 @@ def udaf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASOF LEFT JOIN signups s
       ON p.user_id = s.user_id AND s.signup_ts <= p.ts
     """,
+    cost_note=(
+        "applyInPandas cogroup API-surface proof: Arrow serialization is the "
+        "cost; the codegen fast path for the same semantics is join_asof (see "
+        "the queries/udfs.py module docstring)"
+    ),
+    ratio_exception=True,
 )
 def udf_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CO-GROUPED pandas surface (cogroup().applyInPandas — the last

@@ -446,6 +446,14 @@ def _order_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "orders_active_episodes",
     tier="B",
     oracle=_EPISODES_ORACLE,
+    cost_note=(
+        "join + 2 keyed window sorts + agg = 4 stages; lineitem is "
+        "pre-aggregated to per-order MAX(shipdate) before the join (1.45 s -> "
+        "1.00 s, and the 4x fact reduction that matters at scale); the "
+        "remaining gap is per-stage latency vs DuckDB's 0.17 s single-node "
+        "run"
+    ),
+    ratio_exception=True,
 )
 def orders_active_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval coalescing / gaps-and-islands over VARIABLE-LENGTH
@@ -526,6 +534,16 @@ def orders_active_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "orders_active_episodes_arrow",
     tier="B",
     oracle=_EPISODES_ORACLE,
+    cost_note=(
+        "the registered scale form of orders_active_episodes: same join + "
+        "hash exchange + local sort, then one mapInPandas scan instead of two "
+        "WindowExecs. At sf0.1 the Python-worker spin-up and Arrow transfer "
+        "are fixed costs (~0.3-0.5 s) the windowed form doesn't pay, so it "
+        "reads slightly slower here; the trade is 22.4 s vs 46.6 s at 100x "
+        "(SCALING.md active_episodes_arrow 15.3x vs 112x windowed). Same "
+        "sub-second oracle floor story as orders_active_episodes"
+    ),
+    ratio_exception=True,
 )
 def orders_active_episodes_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval coalescing as ONE vectorized Arrow pass — the registered
@@ -571,6 +589,12 @@ def orders_active_episodes_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_order GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
+    cost_note=(
+        "per-order MAX pre-agg + priority join + ppm rate agg = 3 stages; "
+        "0.72 s absolute; the pre-agg is the 4x fact reduction documented in "
+        "the query's docstring"
+    ),
+    ratio_exception=True,
 )
 def lineitem_otif_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """On-time-in-full rate per order priority — the supply-chain
@@ -908,6 +932,15 @@ def orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN imp i ON n.n_nationkey = i.nk
     ORDER BY n.n_nationkey
     """,
+    cost_note=(
+        "fused one-fact-pass shape: 4-way dim join + two-sided explode feeds "
+        "exporter+importer marginals from one lineitem scan (docstring: 14 -> "
+        "10 scans), then constant-size |nations|^2 matrix math; 0.81-0.94 s "
+        "vs a ~0.1 s MATERIALIZED-CTE oracle. The fact join + first agg "
+        "absorb the volume: SCALING.md trade_balance ~10x@100x controlled; "
+        "the absolute bench cost is stage machinery on 580KB, not a growth "
+        "term"
+    ),
 )
 def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation trade balance over the cross-border flow matrix
