@@ -1,13 +1,11 @@
-"""Agg-shaped interval coalescing must equal the windowed episode stitch
-(operators/intervals.py vs queries/warehouse.orders_active_episodes)."""
+"""The Arrow interval scan (operators/intervals.py) must equal the
+windowed episode and session queries it is the scale form of."""
 
 from __future__ import annotations
 
 from datetime import datetime
 
 from pyspark.sql import functions as F
-
-from ub_etl_spark.operators.intervals import coalesce_intervals_agg
 
 
 def _rows(df):
@@ -21,51 +19,6 @@ def _rows(df):
         )
         for r in df.collect()
     )
-
-
-def test_matches_windowed_episodes_on_corpus(spark, sf_dir):
-    from ub_etl_spark.registry import load_all
-
-    windowed = _rows(load_all()["orders_active_episodes"].fn(spark, sf_dir))
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    last_ship = li.groupBy(F.col("l_orderkey").alias("o_orderkey")).agg(
-        F.max("l_shipdate").alias("iv_end")
-    )
-    iv = o.select(
-        "o_custkey", F.col("o_orderdate").alias("iv_start"), "o_orderkey"
-    ).join(last_ship, "o_orderkey")
-    agg = _rows(coalesce_intervals_agg(iv, "o_custkey", "iv_start", "iv_end"))
-    assert agg == windowed
-
-
-def test_cross_month_chain_and_gap(spark):
-    """An episode chaining across three month buckets must come out as ONE
-    episode (the phase-2 merge), and a true gap must split."""
-    ts = lambda s: datetime.fromisoformat(s)  # noqa: E731
-    df = spark.createDataFrame(
-        [
-            # key 1: [Jan10, Feb05] -> [Feb01, Mar03] -> [Mar03, Mar20] chain
-            (1, ts("2024-01-10"), ts("2024-02-05")),
-            (1, ts("2024-02-01"), ts("2024-03-03")),
-            (1, ts("2024-03-03"), ts("2024-03-20")),
-            # key 1: gap, then a second episode
-            (1, ts("2024-06-01"), ts("2024-06-02")),
-            # key 2: long first interval COVERS a later short one (running
-            # max, not lag — the case a prev-end lag gets wrong)
-            (2, ts("2024-01-01"), ts("2024-05-01")),
-            (2, ts("2024-02-01"), ts("2024-02-02")),
-            (2, ts("2024-07-01"), ts("2024-07-02")),
-        ],
-        "k bigint, s timestamp, e timestamp",
-    )
-    got = _rows(coalesce_intervals_agg(df, "k", "s", "e"))
-    assert got == [
-        (1, 1, ts("2024-01-10"), ts("2024-03-20"), 3),
-        (1, 2, ts("2024-06-01"), ts("2024-06-02"), 1),
-        (2, 1, ts("2024-01-01"), ts("2024-05-01"), 2),
-        (2, 2, ts("2024-07-01"), ts("2024-07-02"), 1),
-    ]
 
 
 def test_arrow_form_matches_windowed_on_corpus(spark, sf_dir):
@@ -85,53 +38,15 @@ def test_arrow_form_matches_windowed_on_corpus(spark, sf_dir):
     assert got == windowed
 
 
-def test_arrow_cross_batch_carry(spark):
-    """Force multi-batch partitions (maxRecordsPerBatch=2) so episodes
-    span Arrow batches and keys change at batch boundaries — the carry
-    path must produce exactly the agg form's answer."""
-    from datetime import datetime
-
-    from ub_etl_spark.operators.intervals import (
-        coalesce_intervals_agg,
-        coalesce_intervals_arrow,
-    )
-
-    ts = lambda s: datetime.fromisoformat(s)  # noqa: E731
-    rows = []
-    # key 1: one long chain of 7 touching intervals -> ONE episode that
-    # must survive several batch carries, then a gap episode
-    for d in range(7):
-        rows.append((1, ts(f"2024-01-{10+d:02d}"), ts(f"2024-01-{11+d:02d}")))
-    rows.append((1, ts("2024-05-01"), ts("2024-05-02")))
-    # key 2: starts mid-batch; covering interval then far gap
-    rows.append((2, ts("2024-01-01"), ts("2024-04-01")))
-    rows.append((2, ts("2024-02-01"), ts("2024-02-02")))
-    rows.append((2, ts("2024-06-01"), ts("2024-06-02")))
-    # key 3: single row (open episode flushed at iterator end)
-    rows.append((3, ts("2024-03-01"), ts("2024-03-05")))
-    df = spark.createDataFrame(rows, "k bigint, s timestamp, e timestamp")
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(conf)
-    spark.conf.set(conf, "2")
-    try:
-        # num_partitions=1 puts every key in ONE partition stream: the
-        # hardest carry case (key changes always inside a partition)
-        got = _rows(coalesce_intervals_arrow(df, "k", "s", "e", num_partitions=1))
-    finally:
-        spark.conf.set(conf, prev)
-    want = _rows(coalesce_intervals_agg(df, "k", "s", "e"))
-    assert got == want
-    assert len(want) == 5  # 2 + 2 + 1 episodes
-
-
 def test_null_precondition_raises_in_both_forms(spark):
     """r7 ADVICE: a NULL key/start/end must fail loudly and identically in
-    the agg and Arrow forms, never silently mis-stitch."""
+    both interval operators (the Arrow scan and the token-span fold),
+    never silently mis-stitch."""
     import pytest
 
     from ub_etl_spark.operators.intervals import (
-        coalesce_intervals_agg,
         coalesce_intervals_arrow,
+        coalesce_token_spans,
     )
 
     ts = lambda s: datetime.fromisoformat(s)  # noqa: E731
@@ -142,28 +57,28 @@ def test_null_precondition_raises_in_both_forms(spark):
         ],
         "k bigint, s timestamp, e timestamp",
     )
-    for form in (coalesce_intervals_agg, coalesce_intervals_arrow):
-        with pytest.raises(Exception, match="non-null precondition"):
-            form(df, "k", "s", "e").collect()
+    spans = spark.createDataFrame([(1, 0), (1, None)], "k bigint, pos bigint")
+    with pytest.raises(Exception, match="non-null precondition"):
+        coalesce_intervals_arrow(df, "k", "s", "e").collect()
+    with pytest.raises(Exception, match="non-null precondition"):
+        coalesce_token_spans(spans, "k", "pos", 3).collect()
     # the guard passes clean frames through untouched
     clean = df.filter(F.col("s").isNotNull())
-    assert coalesce_intervals_agg(clean, "k", "s", "e").count() == 1
     assert coalesce_intervals_arrow(clean, "k", "s", "e").count() == 1
+    clean_spans = spans.filter(F.col("pos").isNotNull())
+    assert coalesce_token_spans(clean_spans, "k", "pos", 3).count() == 1
 
 
 def test_session_gap_boundary_synthetic(spark):
     """r8 ADVICE: pin the 30-minute session-gap boundary with a synthetic
     frame instead of relying on the fixture corpus containing exact
     30-minute ties.  An EXACT 30-minute gap merges (touching intervals;
-    the lag form's ``gap <= INTERVAL 30 MINUTES``); 30min+1s splits."""
+    the lag form's ``gap <= INTERVAL 30 MINUTES``); 30min+1s splits.
+    The Arrow scan reads the same rows as [ts, ts + 30 min] intervals in
+    tests/test_properties_intervals.py::test_session_gap_boundary."""
     from datetime import timedelta
 
     from pyspark.sql import Window as W
-
-    from ub_etl_spark.operators.intervals import (
-        coalesce_intervals_agg,
-        coalesce_intervals_arrow,
-    )
 
     ts = lambda s: datetime.fromisoformat(s)  # noqa: E731
     gap = timedelta(minutes=30)
@@ -176,20 +91,14 @@ def test_session_gap_boundary_synthetic(spark):
         ],
         "k bigint, ts timestamp",
     )
-    iv = df.select(
-        "k",
-        F.col("ts").alias("s"),
-        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("e"),
-    )
     want = [
         (1, 1, ts("2024-01-01 00:00:00"), ts("2024-01-01 01:00:00"), 2),
         (2, 1, ts("2024-01-01 00:00:00"), ts("2024-01-01 00:30:00"), 1),
         (2, 2, ts("2024-01-01 00:30:01"), ts("2024-01-01 01:00:01"), 1),
     ]
-    for form in (coalesce_intervals_agg, coalesce_intervals_arrow):
-        assert _rows(form(iv, "k", "s", "e")) == want, form.__name__
-    # ... and the lag-based sessionization (stream_session_window's exact
-    # shape) agrees at both boundaries: session_end == episode_end - gap.
+    # the lag-based sessionization (stream_session_window's exact shape)
+    # agrees with the interval episodes at both boundaries:
+    # session_end == episode_end - gap.
     w = W.partitionBy("k").orderBy("ts")
     lag_gap = F.col("ts") - F.lag("ts").over(w)
     sess = (
@@ -220,8 +129,8 @@ def test_session_gap_boundary_synthetic(spark):
 
 
 def test_session_window_as_interval_coalescing(spark, sf_dir):
-    """Sessions ARE coalesced [ts, ts+gap] intervals (scale_smoke's
-    session_window_arrow lever): equal-length intervals make the running
+    """Sessions ARE coalesced [ts, ts+gap] intervals (the registered
+    session_window_arrow query's premise): equal-length intervals make the running
     max the previous end, so 'touching or overlapping' == gap <= 30 min —
     the Arrow interval scan must reproduce stream_session_window
     row-for-row."""
@@ -257,8 +166,8 @@ def test_duplicate_interval_ties_stable_across_forms(spark):
     orders_active_episodes at sf1 (r15): the cumulative-sum window's
     order must repeat the flag window's FULL total order, or a tie swap
     re-partitions episode membership.  Pin the windowed form against the
-    order-free agg union on a fixture built entirely of such ties,
-    across several physical orderings."""
+    order-free interval union (written out below) on a fixture built
+    entirely of such ties, across several physical orderings."""
     from datetime import date
 
     from ub_etl_spark.registry import load_all

@@ -5,6 +5,7 @@ scaler statistics, sample determinism, PageRank conservation."""
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import functions as F
 
@@ -142,3 +143,25 @@ def test_pagerank_is_a_probability_distribution(spark, sf_dir):
     assert all(r.pagerank > 0 for r in rows)
     # each quantization floors away <1e-12 per edge per iteration
     assert abs(total - 1.0) < 1e-6
+
+
+def test_pagerank_edges_freed_by_release_persisted(spark, sf_dir, tmp_path):
+    """The persisted edge list is tracked: after the query runs,
+    release_persisted() alone (no clearCache) leaves no persisted RDD
+    behind, so every bench sample rebuilds and persists the same plan.  A
+    fresh directory (links to the fixture tables) rules out a frame left
+    by an earlier call on the shared fixture path."""
+    from ub_etl_spark.session import release_persisted
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    for t in ("lineitem", "orders", "customer", "supplier", "nation"):
+        os.symlink(os.path.join(sf_dir, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    release_persisted()
+    spark.catalog.clearCache()
+    before = persisted()
+    graph_pagerank_trade(spark, str(tmp_path)).write.mode("overwrite").format("noop").save()
+    assert persisted() != before
+    release_persisted()
+    assert persisted() == before

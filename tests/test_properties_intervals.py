@@ -1,11 +1,13 @@
-"""Randomized property test for interval coalescing: both distributed
-forms (agg fold, Arrow scan) against a pure-Python sweep-line model —
-cross-impl, so a mistake shared by the two Spark formulations can't hide
-(deterministic seeds; one Spark job per form, the test_properties_*
-convention).  The generator is biased toward the hard cases: touching
-boundaries (end == next start merges), equal starts, containment chains
-(a long interval covering several later ones — the running-max case a
-previous-end lag gets wrong), and single-row keys."""
+"""The Arrow interval scan against a pure-Python sweep-line model: a
+randomized property test plus the hand-picked hard cases (cross-month
+chains, a covering interval, episodes carried across Arrow batches, the
+exact 30-minute session boundary).  Every input also runs with 2-row
+Arrow batches in one partition, so the scan's cross-batch carry path is
+exercised on each case (deterministic seeds; few Spark jobs per test, the
+test_properties_* convention).  The random generator is biased toward the
+hard cases: touching boundaries (end == next start merges), equal starts,
+containment chains (a long interval covering several later ones — the
+running-max case a previous-end lag gets wrong), and single-row keys."""
 
 from __future__ import annotations
 
@@ -13,10 +15,7 @@ from datetime import datetime, timedelta
 
 import numpy as np
 
-from ub_etl_spark.operators.intervals import (
-    coalesce_intervals_agg,
-    coalesce_intervals_arrow,
-)
+from ub_etl_spark.operators.intervals import coalesce_intervals_arrow
 
 _T0 = datetime(2024, 1, 1)
 
@@ -60,25 +59,101 @@ def _gen(rng: np.random.RandomState, n_rows: int):
     return rows
 
 
-def test_both_forms_match_python_model_random(spark):
-    rng = np.random.RandomState(29)
-    rows = _gen(rng, 600)
+def _assert_matches_model(spark, rows, batch_rows=2):
+    """The Arrow form equals the model under default batching and under
+    ``batch_rows``-row Arrow batches in ONE partition (every key change
+    then falls inside a partition stream: the hardest carry case).
+    Returns the model's episodes."""
     df = spark.createDataFrame(rows, "k bigint, s timestamp, e timestamp")
     want = _py_model(rows)
 
-    def got(form, **kw):
+    def got(**kw):
         return sorted(
             (r.k, r.episode, r.episode_start, r.episode_end, r.n_orders)
-            for r in form(df, "k", "s", "e", **kw).collect()
+            for r in coalesce_intervals_arrow(df, "k", "s", "e", **kw).collect()
         )
 
-    assert got(coalesce_intervals_agg) == want
-    assert got(coalesce_intervals_arrow) == want
-    # the carry path under adversarial batching must agree too
+    assert got() == want
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(conf)
-    spark.conf.set(conf, "3")
+    spark.conf.set(conf, str(batch_rows))
     try:
-        assert got(coalesce_intervals_arrow, num_partitions=1) == want
+        assert got(num_partitions=1) == want
     finally:
         spark.conf.set(conf, prev)
+    return want
+
+
+def test_arrow_form_matches_python_model_random(spark):
+    _assert_matches_model(spark, _gen(np.random.RandomState(29), 600), batch_rows=3)
+
+
+def test_cross_month_chain_and_gap(spark):
+    """An episode chaining across three months comes out as ONE episode,
+    a true gap splits, and a long first interval COVERS a later short one
+    (running max, not lag — the case a previous-end lag gets wrong)."""
+    ts = lambda s: datetime.fromisoformat(s)  # noqa: E731
+    rows = [
+        # key 1: [Jan10, Feb05] -> [Feb01, Mar03] -> [Mar03, Mar20] chain
+        (1, ts("2024-01-10"), ts("2024-02-05")),
+        (1, ts("2024-02-01"), ts("2024-03-03")),
+        (1, ts("2024-03-03"), ts("2024-03-20")),
+        # key 1: gap, then a second episode
+        (1, ts("2024-06-01"), ts("2024-06-02")),
+        # key 2: covering interval, then a gap episode
+        (2, ts("2024-01-01"), ts("2024-05-01")),
+        (2, ts("2024-02-01"), ts("2024-02-02")),
+        (2, ts("2024-07-01"), ts("2024-07-02")),
+    ]
+    assert _assert_matches_model(spark, rows) == [
+        (1, 1, ts("2024-01-10"), ts("2024-03-20"), 3),
+        (1, 2, ts("2024-06-01"), ts("2024-06-02"), 1),
+        (2, 1, ts("2024-01-01"), ts("2024-05-01"), 2),
+        (2, 2, ts("2024-07-01"), ts("2024-07-02"), 1),
+    ]
+
+
+def test_arrow_cross_batch_carry(spark):
+    """Episodes that span Arrow batches and keys that change at batch
+    boundaries: the carry path must hold the open episode and the key's
+    episode count across batches and flush at iterator end."""
+    ts = lambda s: datetime.fromisoformat(s)  # noqa: E731
+    rows = []
+    # key 1: one long chain of 7 touching intervals -> ONE episode that
+    # must survive several batch carries, then a gap episode
+    for d in range(7):
+        rows.append((1, ts(f"2024-01-{10 + d:02d}"), ts(f"2024-01-{11 + d:02d}")))
+    rows.append((1, ts("2024-05-01"), ts("2024-05-02")))
+    # key 2: starts mid-batch; covering interval then far gap
+    rows.append((2, ts("2024-01-01"), ts("2024-04-01")))
+    rows.append((2, ts("2024-02-01"), ts("2024-02-02")))
+    rows.append((2, ts("2024-06-01"), ts("2024-06-02")))
+    # key 3: single row (open episode flushed at iterator end)
+    rows.append((3, ts("2024-03-01"), ts("2024-03-05")))
+    assert _assert_matches_model(spark, rows) == [
+        (1, 1, ts("2024-01-10"), ts("2024-01-17"), 7),
+        (1, 2, ts("2024-05-01"), ts("2024-05-02"), 1),
+        (2, 1, ts("2024-01-01"), ts("2024-04-01"), 2),
+        (2, 2, ts("2024-06-01"), ts("2024-06-02"), 1),
+        (3, 1, ts("2024-03-01"), ts("2024-03-05"), 1),
+    ]
+
+
+def test_session_gap_boundary(spark):
+    """Sessions as [ts, ts + 30 min] intervals: an EXACT 30-minute gap
+    touches and merges, 30 min + 1 s splits (the lag form's side of the
+    same rows is tests/test_intervals.py::test_session_gap_boundary_synthetic)."""
+    ts = lambda s: datetime.fromisoformat(s)  # noqa: E731
+    gap = timedelta(minutes=30)
+    starts = [
+        (1, ts("2024-01-01 00:00:00")),
+        (1, ts("2024-01-01 00:30:00")),
+        (2, ts("2024-01-01 00:00:00")),
+        (2, ts("2024-01-01 00:30:01")),
+    ]
+    rows = [(k, t, t + gap) for k, t in starts]
+    assert _assert_matches_model(spark, rows) == [
+        (1, 1, ts("2024-01-01 00:00:00"), ts("2024-01-01 01:00:00"), 2),
+        (2, 1, ts("2024-01-01 00:00:00"), ts("2024-01-01 00:30:00"), 1),
+        (2, 2, ts("2024-01-01 00:30:01"), ts("2024-01-01 01:00:01"), 1),
+    ]

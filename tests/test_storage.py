@@ -572,3 +572,50 @@ def test_merged_buckets_plan_shuffles_once_per_side(spark, table_dir):
             assert len(files) == 1, (name, files)
     got = {r.k: r.v for r in read_table(spark, table_dir).collect()}
     assert got == {k: int(k >= 50) for k in range(150)}
+
+
+def test_storage_queries_write_under_a_process_private_dir(spark, sf_dir, monkeypatch):
+    """Two processes running the registry at once must not share scratch
+    files (two parity runs used to collide on io_multiformat_roundtrip):
+    every path the storage queries write lies under a directory that is
+    private to this process, and another process gets its own, removed
+    when it exits."""
+    import subprocess
+    import sys
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ub_etl_spark.queries import storage_io
+    from ub_etl_spark.registry import load_all
+
+    written = []
+    for meth in ("save", "parquet", "csv", "json", "orc", "text"):
+        orig = getattr(DataFrameWriter, meth)
+
+        def spy(self, *args, _orig=orig, **kw):
+            path = args[0] if args else kw.get("path")
+            if path is not None:
+                written.append(os.path.abspath(str(path)))
+            return _orig(self, *args, **kw)
+
+        monkeypatch.setattr(DataFrameWriter, meth, spy)
+    for name in ("io_multiformat_roundtrip", "storage_bucketed_merge", "storage_gdpr_delete"):
+        load_all()[name].fn(spark, sf_dir).collect()
+    root = os.path.dirname(storage_io._scratch("probe"))
+    assert written and all(p.startswith(root + os.sep) for p in written), written
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    other = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import os, sys; sys.path.insert(0, sys.argv[1]);"
+            "from ub_etl_spark.queries import storage_io as s;"
+            "print(os.path.dirname(s._scratch('probe')))",
+            repo,
+        ],
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip()
+    assert other and other != root
+    assert not os.path.exists(other)

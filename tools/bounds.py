@@ -19,7 +19,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -715,9 +716,7 @@ SF1_MEASURES = {
 
 
 def run_sf1_only(out_path: str) -> None:
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from sf1_bench import BIG_DIR, ensure_big_dir
 
     spark = get_spark("bounds-sf1")
@@ -746,7 +745,7 @@ def run_sf1_only(out_path: str) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default="/root/repo/BOUNDS.json")
+    ap.add_argument("--out", default=os.path.join(ROOT, "BOUNDS.json"))
     ap.add_argument("--sf1-only", action="store_true",
                     help="measure only the sf1 dedup-flagship rows and merge")
     args = ap.parse_args()

@@ -13,9 +13,11 @@ Writes PLANS.md at the repo root with every audited plan.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ub_etl_spark.registry import load_all  # noqa: E402
 from ub_etl_spark.session import get_spark  # noqa: E402
@@ -616,7 +618,7 @@ def main() -> int:
         print(f"[{'PASS' if not bad else 'FAIL'}] {name:26s} {status}")
         failures += bool(bad)
         out.append(f"\n## {name}\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("".join(out))
     print(f"\nwrote PLANS.md; {len(names) - failures}/{len(names)} plan checks passed")
     return 1 if failures else 0

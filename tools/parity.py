@@ -14,12 +14,14 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ub_etl_spark.registry import load_all  # noqa: E402
 from ub_etl_spark.session import get_spark, release_persisted  # noqa: E402

@@ -33,8 +33,8 @@ conservative for Spark (the oracle skips materialization, the bench
 convention does not).
 
 Output: sf1_bench.json at the repo root (committed) with per-query
-spark_s / oracle_s / ratio / floor-context; tools/scale_smoke.py folds
-the table into SCALING.md on its next regeneration.
+spark_s / oracle_s / ratio / floor-context.  SCALING.md's sf1 section is
+kept by hand from this file; tools/scale_smoke.py leaves it untouched.
 
 Usage:
   python tools/sf1_bench.py              # build /tmp/sf1_10x if absent, run all

@@ -29,13 +29,15 @@ set recorded in bench_detail_r14.json, frozen below for decidability)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from parity import compare  # noqa: E402
 from sf1_bench import BIG_DIR, ensure_big_dir  # noqa: E402

@@ -1,28 +1,22 @@
-"""Interval coalescing (gaps-and-islands) as pure HASH AGGREGATION.
+"""Interval coalescing (gaps-and-islands): overlapping-or-touching
+[start, end] intervals per key merge into numbered episodes.
 
-The windowed form (queries/warehouse.orders_active_episodes, re-expressing
-the reference's session-consolidation semantics) is exact and keyed, but
-WindowExec sorts every physical partition by (key, start) — n log n, and
-the SCALING.md cell measures it riding exactly its computed sort envelope
-(100*ln(100n)/ln(n) = 138.6x predicted, 144.9x measured @100x).  This
-module is the agg-shaped scale path for the same semantics:
+Two operators share one merge rule (an interval whose start is > the
+key's running max end opens a new episode; anything else merges):
 
-  phase 1: bucket intervals by START month and stitch each (key, bucket)
-           group locally — array_sort over a BOUNDED per-group array +
-           one aggregate() fold; no partition-wide sort anywhere.
-  phase 2: per key, concatenate the bucket episode lists in bucket order
-           (starts in month m all precede month m+1, so the concatenation
-           is globally start-sorted) and run the SAME fold once more over
-           the far smaller episode list.
+- coalesce_intervals_arrow: variable-length intervals.  Hash exchange by
+  key, one in-partition sort, then one O(n) vectorized Arrow scan.  It is
+  the scale form of the windowed stitch in
+  queries/warehouse.orders_active_episodes, which pays n log n window
+  sorts per partition (the SCALING.md active_episodes cell).
+- coalesce_token_spans: equal-length integer offset spans.  One hash
+  aggregate per key and a fold (_stitch_fold) over the key's sorted
+  offsets, which stay bounded by the key's token count.
 
-Interval union is associative over CONTIGUOUS slices of the per-key start
-order — bucketing by start keeps each phase-1 group contiguous, which is
-the whole correctness argument; tests/test_intervals.py pins equality
-against the windowed form row-for-row.  Cost: two hash-agg shuffles
-(map-side partial), per-group array sorts bounded by the bucket width,
-zero WindowExec.  Skew bound: a key's phase-1 array holds one month of
-its intervals; its phase-2 array holds its episode count (<= months
-spanned), so neither array scales with total data volume.
+Both enforce the same non-null precondition (_require_non_null).
+tests/test_properties_intervals.py checks the Arrow scan against a
+pure-Python sweep model; tests/test_intervals.py checks it against the
+windowed queries on the fixture corpus.
 """
 
 from __future__ import annotations
@@ -34,13 +28,13 @@ from pyspark.sql import functions as F
 def _require_non_null(df: DataFrame, cols: list[str]) -> DataFrame:
     """Loud shared precondition (r7 ADVICE): a NULL key/start/end would
     degrade DIFFERENTLY per form — the windowed running max treats NULL
-    as vacuous, the agg fold's struct sort moves it, and the Arrow scan's
-    numpy compares go all-False — silently breaking both the episode
-    boundaries and the pinned three-way equality.  Enforce identically
-    in every operator form: a codegen filter whose failing branch raises
-    (a filter, not a dropped assert_true projection, so Catalyst cannot
-    prune it).  Cost: one null-check per row inside the existing scan
-    stage — no extra exchange."""
+    as vacuous, the fold's struct sort moves it, and the Arrow scan's
+    numpy compares go all-False — silently breaking the episode
+    boundaries.  Enforce identically in every operator form: a codegen
+    filter whose failing branch raises (a filter, not a dropped
+    assert_true projection, so Catalyst cannot prune it).  Cost: one
+    null-check per row inside the existing scan stage — no extra
+    exchange."""
     ok = None
     for c in cols:
         cond = F.col(c).isNotNull()
@@ -90,52 +84,6 @@ def _stitch_fold(eps: Column) -> Column:
     )
 
 
-def coalesce_intervals_agg(
-    df: DataFrame,
-    key: str,
-    start_col: str,
-    end_col: str,
-) -> DataFrame:
-    """Coalesce overlapping-or-touching [start, end] intervals per key
-    into numbered episodes — agg-shaped (see module docstring).
-
-    Output matches orders_active_episodes' schema contract: (<key>,
-    episode 1-based in start order, episode_start, episode_end, n_orders).
-    """
-    iv = _require_non_null(df, [key, start_col, end_col]).select(
-        F.col(key).alias("k"),
-        F.trunc(F.col(start_col), "month").alias("bk"),
-        F.struct(
-            F.col(start_col).alias("s"),
-            F.col(end_col).alias("e"),
-            F.lit(1).cast("bigint").alias("n"),
-        ).alias("iv"),
-    )
-    local = iv.groupBy("k", "bk").agg(
-        _stitch_fold(F.array_sort(F.collect_list("iv"))).alias("eps")
-    )
-    # bk is unique within each key group, so the struct sort never reaches
-    # the array field; flatten preserves global start order by bucket.
-    merged = local.groupBy("k").agg(
-        _stitch_fold(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("bk", "eps"))),
-                    lambda t: t["eps"],
-                )
-            )
-        ).alias("eps")
-    )
-    ep = F.posexplode("eps")
-    return merged.select(F.col("k").alias(key), ep.alias("pos", "ep")).select(
-        key,
-        (F.col("pos") + 1).cast("bigint").alias("episode"),
-        F.col("ep.s").alias("episode_start"),
-        F.col("ep.e").alias("episode_end"),
-        F.col("ep.n").alias("n_orders"),
-    )
-
-
 def coalesce_token_spans(
     df: DataFrame,
     key: str,
@@ -147,7 +95,7 @@ def coalesce_token_spans(
     The substring-span dedup shape (operators/dedup.substring_spans):
     every matched token offset contributes the interval [pos, pos+k);
     overlapping-or-touching intervals union into maximal duplicated
-    spans.  Reuses _stitch_fold — one hash-agg shuffle on the key, fold
+    spans.  Uses _stitch_fold — one hash-agg shuffle on the key, fold
     over the per-key sorted offset array (bounded by the key's token
     count, never total data volume), zero WindowExec.  With equal
     lengths and sorted starts the running-max end the fold keeps is
@@ -184,36 +132,41 @@ def coalesce_intervals_arrow(
     end_col: str,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Same contract as coalesce_intervals_agg, as ONE vectorized Arrow
-    pass — the 100TB shape for interval coalescing.
+    """Coalesce overlapping-or-touching [start, end] intervals per key
+    into numbered episodes, as ONE vectorized Arrow pass — the 100TB
+    shape for interval coalescing.
 
-    Why a third form: _stitch_fold is an interpreted higher-order
+    Output matches orders_active_episodes' schema contract: (<key>,
+    episode 1-based in start order, episode_start, episode_end, n_orders).
+
+    Why not a fold: _stitch_fold is an interpreted higher-order
     aggregate whose accumulator copy makes each group's fold O(g^2), and
-    per-group interval counts g grow linearly with fact volume (keys do
-    not amplify) — the agg lever's growth term.  Here the heavy lifting
-    is hash-partition by key + sortWithinPartitions (exactly the
-    exchange+local-sort a keyed WindowExec pays, nothing more), then a
-    single mapInPandas scan: numpy maximum.accumulate finds the running
-    max end, episode boundaries are one vector compare, and
-    maximum.reduceat/diff aggregate each episode — O(n) per partition
-    after the sort, no per-row JVM window machinery, no O(g^2) folds.
-    Arrow moves only (key, start, end).
+    per-key interval counts g grow linearly with fact volume (keys do
+    not amplify).  Here the heavy lifting is hash-partition by key +
+    sortWithinPartitions (exactly the exchange+local-sort a keyed
+    WindowExec pays, nothing more), then a single mapInPandas scan:
+    numpy maximum.accumulate finds the running max end, episode
+    boundaries are one vector compare, and maximum.reduceat/diff
+    aggregate each episode — O(n) per partition after the sort, no
+    per-row JVM window machinery, no O(g^2) folds.  Arrow moves only
+    (key, start, end).
 
-    Precondition (all three forms share it): key/start/end are non-null
-    — the windowed stitch's running max and this scan's numpy compares
-    both treat NULL/NaT as vacuous, so callers filter nulls upstream
-    (the registered episode query builds intervals from inner joins,
-    which cannot produce them).  ENFORCED, not just documented (r7
-    ADVICE): _require_non_null raises loudly — and identically in the
-    agg form — instead of letting a NULL produce silently wrong episode
-    boundaries.
+    Precondition (shared with the windowed query): key/start/end are
+    non-null — the windowed stitch's running max and this scan's numpy
+    compares both treat NULL/NaT as vacuous, so callers filter nulls
+    upstream (the registered episode query builds intervals from inner
+    joins, which cannot produce them).  ENFORCED, not just documented (r7
+    ADVICE): _require_non_null raises loudly instead of letting a NULL
+    produce silently wrong episode boundaries.
 
     Cross-batch state: a partition streams in as multiple Arrow batches
     (same key may span batches — batch size is a config, not a grouping
     guarantee), so the scan carries the last OPEN episode and the key's
     emitted-episode count across batches and flushes on iterator end.
-    Equality against both other forms is pinned in tests/test_intervals.py
-    (including a tiny maxRecordsPerBatch so the carry path actually runs).
+    tests/test_properties_intervals.py pins it against a pure-Python
+    sweep model, including a tiny maxRecordsPerBatch so the carry path
+    actually runs; tests/test_intervals.py pins it against the windowed
+    queries.
     """
     in_types = dict(df.dtypes)
     out_schema = (

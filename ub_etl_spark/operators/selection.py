@@ -1,6 +1,6 @@
-"""Shared selection/pair-generation cores used by both the registered
-queries and tools/scale_smoke.py — one implementation, so a fix to the
-algorithm reaches the scale measurements too (review finding r3)."""
+"""Shared selection/pair-generation cores of the registered queries — one
+implementation, so a fix to the algorithm reaches every query and the
+scale measurements (tools/scale_smoke.py times the registered queries)."""
 
 from __future__ import annotations
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ub_etl_spark.functions.exact import cents, sql_cents
 from ub_etl_spark.registry import register
+from ub_etl_spark.session import tracked_persist
 from ub_etl_spark.sources.tables import load_table as T
 
 
@@ -419,9 +420,6 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PR_ITERS = 5
-# sf_dir -> persisted edge DataFrame (latest only; replaced entries are
-# unpersisted so long sessions don't accumulate cached relations)
-_PR_EDGE_CACHE: dict = {}
 
 
 def _pagerank_oracle() -> str:
@@ -520,18 +518,12 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the edge list: every power iteration joins it again, and
     # without the cache each iteration's lineage would re-run the fact
     # scan + three joins (5 iterations = 5 fact passes at 100 TB).
-    # Cached per sf_dir with replacement-unpersist so repeated calls in
-    # one session (bench runs this among 100+ queries) don't pin a new
-    # copy of the relation in the block manager each time.
-    edges = _PR_EDGE_CACHE.get(sf_dir)
-    if edges is None:
-        edges = raw.select(
-            "src", "dst", (F.col("w") * 1.0 / F.sum("w").over(wsrc)).alias("p")
-        ).persist()
-        for old_key, old_df in list(_PR_EDGE_CACHE.items()):
-            old_df.unpersist()
-            del _PR_EDGE_CACHE[old_key]
-        _PR_EDGE_CACHE[sf_dir] = edges
+    # tracked_persist: each call persists its own edge list, which the
+    # harness frees with release_persisted(), so every sample runs the
+    # same persisted plan.
+    edges = tracked_persist(
+        raw.select("src", "dst", (F.col("w") * 1.0 / F.sum("w").over(wsrc)).alias("p"))
+    )
     n_nodes = nodes.count()  # node-count scalar: one tiny dim count
     base_u = (1_000_000_000_000 * 15) // (100 * n_nodes)
     ranks = nodes.select(

@@ -13,6 +13,7 @@
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import shutil
@@ -32,6 +33,22 @@ from ub_etl_spark.operators.storage import (
 from ub_etl_spark.functions.exact import csum
 from ub_etl_spark.registry import register
 from ub_etl_spark.sources.tables import load_table as T
+
+_SCRATCH_ROOT: str | None = None
+
+
+def _scratch(name: str) -> str:
+    """Path ``name`` under a scratch directory private to this process.
+
+    The directory is created on first use and removed at interpreter
+    exit, so two processes running these queries at once (two parity
+    runs, a bench beside a test session) never write, delete or read
+    each other's files."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="ub_etl_spark_scratch_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
+    return os.path.join(_SCRATCH_ROOT, name)
 
 
 # A10/A11 production shape: initial bucketed load + latest-wins merge that
@@ -56,8 +73,8 @@ from ub_etl_spark.sources.tables import load_table as T
 def storage_bucketed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOTE: unlike every other registry entry this fn has EAGER side
     effects (two parquet writes + a merge) — it is a storage-path test, not
-    a lazy plan.  The table lives at a fixed temp path wiped on entry, so
-    repeated runs don't accumulate copies."""
+    a lazy plan.  The table lives at a scratch path (_scratch) wiped on
+    entry, so repeated runs don't accumulate copies."""
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     base = o.select(
         "o_orderkey",
@@ -72,7 +89,7 @@ def storage_bucketed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(2).alias("version"),
         )
     )
-    path = os.path.join(tempfile.gettempdir(), "ub_etl_spark_bucketed_merge")
+    path = _scratch("bucketed_merge")
     shutil.rmtree(path, ignore_errors=True)
     write_bucketed(base, path, keys=["o_orderkey"], n_buckets=16)
     merge_into_bucketed(
@@ -164,7 +181,7 @@ def rest_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # read back with a partition predicate — the scan must show
 # PartitionFilters (directory pruning, zero IO for other types), which
 # tools/explain_audit.py asserts.  Eager side effects like
-# storage_bucketed_merge; fixed path wiped on entry.
+# storage_bucketed_merge; scratch path wiped on entry.
 @register(
     "storage_partitioned_write",
     tier="A",
@@ -175,7 +192,7 @@ def rest_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def storage_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "events").select("event_id", "user_id", "value", "event_type")
-    path = os.path.join(tempfile.gettempdir(), "ub_etl_spark_partitioned_events")
+    path = _scratch("partitioned_events")
     shutil.rmtree(path, ignore_errors=True)
     e.write.partitionBy("event_type").mode("overwrite").parquet(path)
     return spark.read.parquet(path).filter(
@@ -213,7 +230,7 @@ def io_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").cast("date").alias("o_orderdate"),
         )
     )
-    root = os.path.join(tempfile.gettempdir(), "ub_etl_spark_multiformat")
+    root = _scratch("multiformat")
     shutil.rmtree(root, ignore_errors=True)
     out = None
     for fmt in FORMATS:
@@ -252,7 +269,7 @@ def io_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def io_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root = os.path.join(tempfile.gettempdir(), "ub_etl_spark_binfiles")
+    root = _scratch("binfiles")
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root)
     for i in range(_N_PAGES * 5):
@@ -318,10 +335,10 @@ def _zorder_oracle(bits: int = 8) -> str:
     ratio_exception=True,
 )
 def storage_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EAGER side effects (clustered write to a wiped fixed temp path):
+    """EAGER side effects (clustered write to a wiped scratch path):
     a storage-layout test, not a lazy plan."""
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    path = os.path.join(tempfile.gettempdir(), "ub_etl_spark_zorder")
+    path = _scratch("zorder")
     shutil.rmtree(path, ignore_errors=True)
     write_zordered(li, path, cols=["l_orderkey", "l_partkey"], n_files=8, bits=8)
     return spark.read.parquet(path).select(
@@ -349,9 +366,9 @@ def storage_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def storage_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EAGER side effects (fragmented write, then an in-place compaction
-    rewrite at a wiped fixed temp path)."""
+    rewrite at a wiped scratch path)."""
     e = T(spark, sf_dir, "events").select("event_id", "user_id", "value", "event_type")
-    path = os.path.join(tempfile.gettempdir(), "ub_etl_spark_compact")
+    path = _scratch("compact")
     shutil.rmtree(path, ignore_errors=True)
     e.repartition(48).write.parquet(path)
     compact_table(spark, path, target_file_bytes=32 * 1024 * 1024, sort_by=("event_id",))
@@ -378,11 +395,11 @@ def storage_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EAGER side effects (two parquet writes to a wiped fixed temp path),
+    """EAGER side effects (two parquet writes to a wiped scratch path),
     like storage_bucketed_merge: this is a storage-path test, not a lazy
     plan."""
     c = T(spark, sf_dir, "customer")
-    root = os.path.join(tempfile.gettempdir(), "ub_etl_spark_schema_evo")
+    root = _scratch("schema_evo")
     shutil.rmtree(root, ignore_errors=True)
     c.filter(F.col("c_custkey") % 2 == 0).select("c_custkey", "c_name").write.parquet(
         os.path.join(root, "v1")
@@ -423,45 +440,22 @@ def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def storage_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate only the partitions a runtime-filtered dim selects.
-    The partitioned fact layout is written once per SOURCE FINGERPRINT
-    (mtime+size of events.parquet baked into the path) and reused: a
-    regenerated source changes the fingerprint and so the path, which
-    removes the stale-cache hazard a basename-keyed cache would have —
-    the partitioned layout is infrastructure this query READS (DPP's
-    usage shape is lay-out-once / prune-many), so rewriting it per call
-    would benchmark the write, not the pruning."""
+    The partitioned fact layout is written once per process and SOURCE
+    FINGERPRINT (path, mtime and size of events.parquet baked into the
+    path) and reused: a regenerated source changes the fingerprint and
+    so the path, which removes the stale-cache hazard a basename-keyed
+    cache would have — the partitioned layout is infrastructure this
+    query READS (DPP's usage shape is lay-out-once / prune-many), so
+    rewriting it per call would benchmark the write, not the pruning."""
     import hashlib
-    import re as _re
-    import uuid as _uuid
 
     src = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src)
     fp = hashlib.sha256(f"{src}:{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    prefix = f"ub_etl_spark_dpp_events_{os.path.basename(sf_dir.rstrip('/'))}_"
-    base = tempfile.gettempdir()
-    path = os.path.join(base, prefix + fp)
+    path = _scratch(f"dpp_events_{fp}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # stage into a unique tmp dir, then one atomic rename: two
-        # concurrent first runs can both build, but only one rename
-        # lands and the loser cleans its own staging — never a partial
-        # layout at the final path (the rmtree-then-overwrite form this
-        # replaces deleted files under a concurrent writer's job)
-        tmp = path + ".tmp." + _uuid.uuid4().hex
         e = T(spark, sf_dir, "events").select("event_id", "value", "event_type")
-        e.write.partitionBy("event_type").mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # concurrent winner exists
-        # GC: drop finalized layouts of STALE fingerprints for this source
-        # (bounded disk across source regenerations in long-lived envs)
-        for name in os.listdir(base):
-            if (
-                name.startswith(prefix)
-                and name != prefix + fp
-                and _re.fullmatch(_re.escape(prefix) + r"[0-9a-f]{12}", name)
-            ):
-                shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+        e.write.partitionBy("event_type").mode("overwrite").parquet(path)
     fact = spark.read.parquet(path)
     n = T(spark, sf_dir, "nation")
     dim = (
@@ -615,7 +609,7 @@ def storage_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ub_etl_spark.operators.storage import delete_where_partitioned
 
-    path = os.path.join(tempfile.gettempdir(), "ub_etl_spark_gdpr")
+    path = _scratch("gdpr")
     shutil.rmtree(path, ignore_errors=True)
     o.write.partitionBy("o_year").mode("overwrite").parquet(path)
     delete_where_partitioned(
@@ -676,7 +670,7 @@ def io_csv_malformed_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
 
     o = T(spark, sf_dir, "orders")
-    root = os.path.join(tempfile.gettempdir(), "ub_etl_csv_quarantine")
+    root = _scratch("csv_quarantine")
     shutil.rmtree(root, ignore_errors=True)
     (
         o.filter(F.col("o_orderkey") % 100 == 0)
@@ -755,7 +749,7 @@ def storage_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ub_etl_spark.operators.txlog import VersionedTable
 
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = os.path.join(tempfile.gettempdir(), "ub_etl_txlog_query")
+    root = _scratch("txlog_query")
     shutil.rmtree(root, ignore_errors=True)
     t = VersionedTable(root)
     t.write_commit(o.filter(F.col("o_orderkey") % 3 == 0), mode="append")
@@ -797,7 +791,7 @@ def storage_stats_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ub_etl_spark.operators.txlog import StatsTable
 
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = os.path.join(tempfile.gettempdir(), "ub_etl_statstable_query")
+    root = _scratch("statstable_query")
     shutil.rmtree(root, ignore_errors=True)
     t = StatsTable(root, stats_cols=["o_totalprice"])
     t.write_commit(o.repartitionByRange(8, "o_totalprice"), mode="append")

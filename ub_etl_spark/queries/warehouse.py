@@ -489,7 +489,7 @@ def orders_active_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.001-0.1 only because the physical row order happened to
     agree).  With one total order shared by both windows the result is
     engine- and scale-invariant, and equals the order-free interval
-    union the agg/Arrow twins compute."""
+    union the Arrow twin computes."""
     iv = _order_intervals(spark, sf_dir)
     w_prev = (
         Window.partitionBy("o_custkey")
@@ -558,8 +558,9 @@ def orders_active_episodes_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Controlled 100x: 22.4 s vs the windowed form's 46.6 s (SCALING.md
     active_episodes_arrow 15.3x@100x vs the windowed 69.6x); also fastest at 1x.
     Output is row-identical to orders_active_episodes (equality pinned
-    in tests/test_intervals.py including the forced cross-batch carry
-    path) and shares its oracle; intervals come from inner joins so the
+    in tests/test_intervals.py; the forced cross-batch carry path is
+    pinned against a Python model in tests/test_properties_intervals.py)
+    and shares its oracle; intervals come from inner joins so the
     operator's non-null guard is vacuously satisfied."""
     from ub_etl_spark.operators.intervals import coalesce_intervals_arrow
 

@@ -152,9 +152,8 @@ _TRACKED_PERSISTED: list = []
 def tracked_persist(df):
     """Persist ``df`` and register it for release_persisted().
 
-    Use for intra-query shared frames inside registry builders; deliberate
-    cross-call caches (e.g. the PageRank edge cache, which replacement-
-    unpersists itself) stay out of this list.
+    Use for every frame a registry builder persists: the harness frees
+    them all with release_persisted() after the query is materialized.
     """
     df = df.persist()
     _TRACKED_PERSISTED.append(df)
