@@ -201,3 +201,42 @@ def test_duplicate_interval_ties_stable_across_forms(spark):
             ).repartition(4).write.parquet(f"{d}/lineitem.parquet")
             got = _rows(load_all()["orders_active_episodes"].fn(spark, d))
             assert got == expected, f"ordering {order[0]}: {got}"
+
+
+def _shuffle_read_partitions(df):
+    """Partition count of each AQEShuffleRead in df's executed final plan."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "AQEShuffleRead":
+            out.append(node.partitionSpecs().size())
+        if node.nodeName().endswith("QueryStage"):
+            todo.append(node.plan())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
+def test_arrow_scan_exchange_is_coalesced_by_aqe(spark, sf_dir):
+    """The key exchange takes no fixed partition count, so AQE coalesces
+    it to the data size: at 32 shuffle partitions the fixture's intervals
+    are read back in fewer than 32 partitions."""
+    from ub_etl_spark.operators.intervals import coalesce_intervals_arrow
+
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    start = F.col("o_orderdate").cast("timestamp")
+    iv = o.select(
+        "o_custkey",
+        start.alias("iv_start"),
+        (start + F.expr("INTERVAL 30 DAYS")).alias("iv_end"),
+    )
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "32")
+    try:
+        df = coalesce_intervals_arrow(iv, "o_custkey", "iv_start", "iv_end")
+        df.collect()
+        reads = _shuffle_read_partitions(df)
+    finally:
+        spark.conf.set(conf, prev)
+    assert reads and max(reads) < 32, reads

@@ -61,6 +61,24 @@ def test_upsert_within_batch_recency(spark):
     assert rows_set(out) == {(1, 10, 0.8, 2)}
 
 
+def test_upsert_strict_newer_on_two_order_columns(spark):
+    """Recency is (a, b) compared lexicographically.  On an exact tie the
+    existing row is kept; an update older on either column never replaces
+    a newer existing row (a replayed stale batch is a no-op)."""
+    schema = "k long, a long, b long, v string"
+    existing = spark.createDataFrame(
+        [(1, 2, 1, "s1"), (2, 2, 2, "s2"), (3, 1, 5, "s3"), (4, 2, 1, "s4")], schema
+    )
+    updates = spark.createDataFrame(
+        [(1, 2, 1, "u1"), (2, 1, 9, "u2"), (3, 1, 6, "u3"), (4, 2, 0, "u4"), (5, 0, 0, "u5")],
+        schema,
+    )
+    once = upsert_latest_wins(existing, updates, ["k"], order_by=["a", "b"])
+    twice = upsert_latest_wins(once, updates, ["k"], order_by=["a", "b"])
+    want = {1: "s1", 2: "s2", 3: "u3", 4: "s4", 5: "u5"}
+    assert {r.k: r.v for r in once.collect()} == {r.k: r.v for r in twice.collect()} == want
+
+
 def test_upsert_preserves_untouched_keys_at_scale(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     updates = orders.filter(F.col("o_orderkey") % 100 == 0).withColumn(

@@ -61,26 +61,31 @@ def _gen(rng: np.random.RandomState, n_rows: int):
 
 def _assert_matches_model(spark, rows, batch_rows=2):
     """The Arrow form equals the model under default batching and under
-    ``batch_rows``-row Arrow batches in ONE partition (every key change
-    then falls inside a partition stream: the hardest carry case).
+    ``batch_rows``-row Arrow batches in ONE shuffle partition (every key
+    change then falls inside a partition stream: the hardest carry case).
     Returns the model's episodes."""
     df = spark.createDataFrame(rows, "k bigint, s timestamp, e timestamp")
     want = _py_model(rows)
 
-    def got(**kw):
+    def got():
         return sorted(
             (r.k, r.episode, r.episode_start, r.episode_end, r.n_orders)
-            for r in coalesce_intervals_arrow(df, "k", "s", "e", **kw).collect()
+            for r in coalesce_intervals_arrow(df, "k", "s", "e").collect()
         )
 
     assert got() == want
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(conf)
-    spark.conf.set(conf, str(batch_rows))
+    confs = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(batch_rows),
+        "spark.sql.shuffle.partitions": "1",
+    }
+    prev = {c: spark.conf.get(c) for c in confs}
+    for c, v in confs.items():
+        spark.conf.set(c, v)
     try:
-        assert got(num_partitions=1) == want
+        assert got() == want
     finally:
-        spark.conf.set(conf, prev)
+        for c, v in prev.items():
+            spark.conf.set(c, v)
     return want
 
 

@@ -16,9 +16,9 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _scale_smoke():
+def _tool(name):
     spec = importlib.util.spec_from_file_location(
-        "scale_smoke", os.path.join(REPO, "tools", "scale_smoke.py")
+        name, os.path.join(REPO, "tools", f"{name}.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -61,7 +61,7 @@ def test_tool_imports_the_checkout_it_lives_in(tool, tmp_path):
 def test_scale_cells_name_registered_queries():
     from ub_etl_spark.registry import load_all
 
-    S = _scale_smoke()
+    S = _tool("scale_smoke")
     registry = load_all()
     sections = (S.RELATIONAL, S.GRAPH, S.CORPUS)
     labels = [label for cells in sections for label in cells]
@@ -71,10 +71,13 @@ def test_scale_cells_name_registered_queries():
 
 
 def test_scale_tail_keeps_hand_kept_sections():
-    S = _scale_smoke()
+    S = _tool("scale_smoke")
     text = "# T\n\n## Relational (2x)\n\n| a |\n\n## Corpus (2x)\n\nx\n\n## sf1 pass\n\nkept\n"
     assert S.hand_kept_tail(text) == "## sf1 pass\n\nkept\n"
     assert S.hand_kept_tail("# T\n\n## Graph (2x)\n") == ""
+    # PLANS.md: the digest table is generated, the floor analysis is kept
+    plans = "# P\n\n## Plan shapes (sf0.01)\n\n| q |\n\n## Floor  \n\n| a |\n- x\n\n"
+    assert S.hand_kept_tail(plans, ("## Plan shapes",)) == "## Floor  \n\n| a |\n- x\n\n"
 
 
 def test_scale_amplified_dirs_feed_one_cell_per_section(spark, sf_dir, tmp_path):
@@ -83,7 +86,7 @@ def test_scale_amplified_dirs_feed_one_cell_per_section(spark, sf_dir, tmp_path)
     the disjoint-copy graph (triangle_count) and both corpus tables
     (hybrid_rrf_3q), so a finite ratio pins that each directory holds
     every table its builders read."""
-    S = _scale_smoke()
+    S = _tool("scale_smoke")
     big = str(tmp_path / "big")
     S.amplify_all(spark, sf_dir, big, 2, 2, 2)
     assert (
@@ -98,3 +101,85 @@ def test_scale_amplified_dirs_feed_one_cell_per_section(spark, sf_dir, tmp_path)
         [row] = S.measure(spark, {label: cells[label]}, sf_dir, dk, 2)
         ratio = float(row.split("|")[4].strip().removesuffix("x"))
         assert math.isfinite(ratio) and ratio > 0, row
+
+
+# A two-core run's executed plan (arguments cut to 76 columns): a
+# broadcast join whose build side scans an InMemoryRelation holding its
+# own adaptive plan.  Each adaptive plan prints a final and an initial
+# section; the nested one is indented by its depth in its own tree.
+PLAN = """\
+AdaptiveSparkPlan isFinalPlan=true
++- == Final Plan ==
+   ResultQueryStage 3
+   +- *(3) Project [k#19L, count#20L, n#2L]
+      +- *(3) BroadcastHashJoin [k#19L], [k#1L], Inner, BuildRight, false
+         :- *(3) HashAggregate(keys=[_groupingexpression#53L], functions=[co
+         :  +- AQEShuffleRead coalesced
+         :     +- ShuffleQueryStage 0
+         :        +- Exchange hashpartitioning(_groupingexpression#53L, 2),
+         :           +- *(1) HashAggregate(keys=[_groupingexpression#53L], f
+         :              +- *(1) Project [(id#18L % 7) AS _groupingexpression
+         :                 +- *(1) Filter isnotnull((id#18L % 7))
+         :                    +- *(1) Range (0, 100, step=1, splits=2)
+         +- BroadcastQueryStage 2
+            +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, b
+               +- *(2) Filter isnotnull(k#1L)
+                  +- TableCacheQueryStage 1
+                     +- InMemoryTableScan [k#1L, n#2L], [isnotnull(k#1L)]
+                           +- InMemoryRelation [k#1L, n#2L], StorageLevel(di
+                                 +- AdaptiveSparkPlan isFinalPlan=true
+                                 +- == Final Plan ==
+                                    ResultQueryStage 1
+                                    +- *(2) HashAggregate(keys=[_groupingexp
+                                       +- ShuffleQueryStage 0
+                                          +- Exchange hashpartitioning(_grou
+                                             +- *(1) HashAggregate(keys=[_gr
+                                                +- *(1) Project [(id#0L % 5)
+                                                   +- *(1) Range (0, 20, ste
+                                 +- == Initial Plan ==
+                                    HashAggregate(keys=[_groupingexpression#
+                                    +- Exchange hashpartitioning(_groupingex
+                                       +- HashAggregate(keys=[_groupingexpre
+                                          +- Project [(id#0L % 5) AS _groupi
+                                             +- Range (0, 20, step=1, splits
++- == Initial Plan ==
+   Project [k#19L, count#20L, n#2L]
+   +- BroadcastHashJoin [k#19L], [k#1L], Inner, BuildRight, false
+      :- HashAggregate(keys=[_groupingexpression#53L], functions=[count(1)],
+      :  +- Exchange hashpartitioning(_groupingexpression#53L, 2), ENSURE_RE
+      :     +- HashAggregate(keys=[_groupingexpression#53L], functions=[part
+      :        +- Project [(id#18L % 7) AS _groupingexpression#53L]
+      :           +- Filter isnotnull((id#18L % 7))
+      :              +- Range (0, 100, step=1, splits=2)
+      +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint,
+         +- Filter isnotnull(k#1L)
+            +- InMemoryTableScan [k#1L, n#2L], [isnotnull(k#1L)]
+                  +- InMemoryRelation [k#1L, n#2L], StorageLevel(disk, memor
+                        +- AdaptiveSparkPlan isFinalPlan=true
+                        +- == Final Plan ==
+                           ResultQueryStage 1
+                           +- *(2) HashAggregate(keys=[_groupingexpression#5
+                              +- ShuffleQueryStage 0
+                                 +- Exchange hashpartitioning(_groupingexpre
+                                    +- *(1) HashAggregate(keys=[_groupingexp
+                                       +- *(1) Project [(id#0L % 5) AS _grou
+                                          +- *(1) Range (0, 20, step=1, spli
+                        +- == Initial Plan ==
+                           HashAggregate(keys=[_groupingexpression#5L], func
+                           +- Exchange hashpartitioning(_groupingexpression#
+                              +- HashAggregate(keys=[_groupingexpression#5L]
+                                 +- Project [(id#0L % 5) AS _groupingexpress
+                                    +- Range (0, 20, step=1, splits=2)
+"""
+
+
+def test_plan_digest_counts_the_final_plan_only():
+    """Operators of both final sections count, also inside the cached
+    relation; the initial sections, AQEShuffleRead, query-stage wrappers
+    and AdaptiveSparkPlan do not, and ``*(n)`` codegen prefixes are
+    dropped."""
+    digest = _tool("explain_audit").plan_digest(PLAN)
+    assert digest == (
+        "BroadcastExchange=1 BroadcastHashJoin=1 Exchange=2 Filter=2"
+        " HashAggregate=4 InMemoryRelation=1 InMemoryTableScan=1 Project=3 Range=2"
+    )

@@ -29,11 +29,8 @@ def latest_evidence() -> dict[str, int]:
     latest: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
-        doc = json.load(open(path))
-        queries = doc.get("queries", doc)
-        names = queries.keys() if isinstance(queries, dict) else (
-            item["query"] for item in queries
-        )
+        with open(path) as f:
+            names = json.load(f)  # query name -> result
         for name in names:
             latest[name] = max(latest.get(name, 0), rnd)
     return latest

@@ -1,26 +1,44 @@
-"""Plan audit: dump formatted physical plans for the headline queries and
-check scale-critical properties (SURVEY.md §4):
+"""Plan audit: check scale-critical properties of every registered
+query's physical plan (SURVEY.md §4) and emit a per-query plan-shape
+digest:
 
   - parquet pushdown: PushedFilters non-empty where the query filters a
     scanned column; ReadSchema pruned to the referenced columns
   - small-dim joins go broadcast (BroadcastHashJoin, no shuffle of the dim)
   - whole-stage codegen spans cover the hot path (no interpreted HOFs)
 
+Each query's EXPECT entries are checked against its formatted plan plus
+its executed final adaptive plan, both built in memory.  A failing
+query's full plan goes to stdout.
+
 Usage: python tools/explain_audit.py [--sf DIR] [query ...]
-Writes PLANS.md at the repo root with every audited plan.
+A run over every query rewrites the digest table at the top of this
+checkout's PLANS.md: one row per query, PASS/FAIL plus the count of each
+physical operator in the final plan (plan_digest).  Everything from the
+file's first hand-kept ``## `` heading on is kept byte for byte.  A run
+over named queries prints their rows and writes nothing.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import os
+import re
 import sys
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
+from scale_smoke import hand_kept_tail  # noqa: E402
 from ub_etl_spark.registry import load_all  # noqa: E402
 from ub_etl_spark.session import get_spark  # noqa: E402
+
+PLANS_MD = os.path.join(ROOT, "PLANS.md")
+DIGEST_HEADING = "## Plan shapes"
 
 # name -> list of substrings that MUST appear in the formatted plan.
 # "codegen id :" is how formatted explain marks whole-stage-codegen spans.
@@ -500,84 +518,115 @@ EXPECT = {
     "orders_lines_per_order_hist": ["HashAggregate"],
 }
 
-# Kept by hand; prepended to the generated PLANS.md on every regeneration.
-PREAMBLE = """
-## Fixed-overhead floor analysis (sf0.1, local[32] — why some ratios stay >2x)
+# Nodes that say how AQE ran a plan rather than what the plan is: the
+# query-stage wrappers, the partition-coalescing reads (their count moves
+# with the core count) and the row/columnar adapters.
+UNCOUNTED = frozenset(
+    {
+        "AdaptiveSparkPlan",
+        "AQEShuffleRead",
+        "BroadcastQueryStage",
+        "ColumnarToRow",
+        "InputAdapter",
+        "ResultQueryStage",
+        "ShuffleQueryStage",
+        "TableCacheQueryStage",
+    }
+)
+_HEADER = re.compile(r"( *)\+- == (Final|Current|Initial) Plan ==$")
+_NODE = re.compile(r"((?:   |:  )*)([+:]- )(.*)")
+_NAME = re.compile(r"(?:\*\(\d+\) )?([A-Za-z]\w*)")
 
-BENCH_r*.json records per-query `spark_s`, `oracle_s` (DuckDB, same process,
-32 threads) and their ratio.  The aggregate ratio at sf0.1 is dominated by
-Spark's fixed per-query cost, not by plan quality.  Measured floors on this
-machine (min of 5, steady-state, shared session):
 
-| shape | floor |
-|---|---|
-| `spark.range(1)` -> noop sink (pure job overhead) | ~0.06 s |
-| single parquet scan -> noop (1 stage) | ~0.14 s |
-| one shuffle under AQE (2 query-stage jobs + re-plan) | ~0.20-0.35 s |
-| any Python-touching plan (ArrowEvalPython / mapInPandas worker round-trip) | +0.15-0.25 s |
+def plan_digest(plan: str) -> str:
+    """``Operator=count ...``, sorted by name, of the nodes in an
+    ``executedPlan().toString()`` outside every ``== Initial Plan ==``
+    section, less UNCOUNTED.
 
-DuckDB's mean oracle time across the 41 oracle'd headline queries is
-~0.085 s — BELOW Spark's single-stage floor — so a >=2-3x ratio at this
-scale is the cost of the distributed execution machinery itself, not a plan
-defect.  With 41 oracle'd queries the floor alone (41 x ~0.25 s ~= 10.3 s)
-exceeds 2x the DuckDB total (2 x 3.6 s), i.e. the 2x aggregate target is
-unreachable at sf0.1 by construction.  SCALING.md shows the same plans cost
-only ~4-19x more at 100x the data — the floor amortizes; these plans win
-at scale.  The worst per-query ratios are consistently the CHEAPEST
-queries (join_broadcast 0.29 s vs 9 ms; multimodal_decode 0.34 s vs 12 ms;
-timeseries_multi_rollup 0.36 s vs 21 ms) — pure floor, audited plans.
+    An adaptive plan at tree depth D prints its headers at column 3*D
+    and each section as a fresh tree indented by 3*(D+1) columns, also
+    when it is nested in an InMemoryRelation, so indentation alone does
+    not say where a section ends.  The parser keeps one frame per open
+    tree: its indent and the last-child flags of its latest node (the
+    ``:`` bars).  A line continues the innermost frame whose tree it
+    fits (a child, an inner child two levels down, or the next sibling
+    of an ancestor that had one); frames it skips are finished.  A line
+    that fits no frame (the rest of a multi-line literal) is ignored."""
+    # frame: [section kind, indent, adaptive-plan depth, last-child flags
+    # of the latest node or None before the root]
+    frames: list[list] = [["top", 0, -1, None]]
+    counts: Counter[str] = Counter()
+    for line in plan.splitlines():
+        header = _HEADER.fullmatch(line)
+        if header:
+            depth = len(header.group(1)) // 3
+            if header.group(2) == "Initial":
+                # the final section of the same adaptive plan, and
+                # everything nested in it, is finished
+                while len(frames) > 1 and (
+                    frames[-1][0] == "Initial" or frames[-1][2] != depth
+                ):
+                    frames.pop()
+                del frames[max(len(frames) - 1, 1) :]
+            frames.append([header.group(2), depth + 1, depth, None])
+            continue
+        for i in range(len(frames) - 1, -1, -1):
+            flags = _fit(line, frames[i][1], frames[i][3])
+            if flags is not None:
+                del frames[i + 1 :]
+                frames[i][3] = flags
+                break
+        else:
+            continue
+        name = _NAME.match(line.lstrip(" :+-"))
+        if name and name.group(1) not in UNCOUNTED:
+            if all(f[0] != "Initial" for f in frames):
+                counts[name.group(1)] += 1
+    return " ".join(f"{op}={n}" for op, n in sorted(counts.items()))
 
-Bench methodology note: per-query time is the min over two full interleaved
-passes of the headline list (not back-to-back reps) — this VM shows
-transient multi-second noise windows that otherwise inflate both samples of
-whichever query they land on (observed: the same query measuring 1.3 s and
-5.7 s across consecutive bench invocations).
 
-Per-offender notes (worst ratios in BENCH_r02):
+def _fit(line: str, indent: int, flags: list[bool] | None) -> list[bool] | None:
+    """The last-child flags ``line`` leaves on a tree printed at
+    ``indent`` whose latest node left ``flags``, or None when the line is
+    not the tree's next node."""
+    pad = "   " * indent
+    if not line.startswith(pad):
+        return None
+    rest = line[len(pad) :]
+    if flags is None:  # the root: no tree prefix
+        return [] if rest[:1] not in ("", " ", ":", "+") else None
+    node = _NODE.fullmatch(rest)
+    if not node:
+        return None
+    bars = [node.group(1)[j : j + 3] == "   " for j in range(0, len(node.group(1)), 3)]
+    depth = len(bars) + 1
+    if depth <= len(flags):  # next sibling of an ancestor with one left
+        ok = bars == flags[: depth - 1] and not flags[depth - 1]
+    else:  # a child, or an inner child (subquery, cached plan) two down
+        ok = depth <= len(flags) + 2 and bars[: len(flags)] == flags
+    return bars + [node.group(2) == "+- "] if ok else None
 
-- **join_broadcast** (~0.24 s vs 6 ms): two scans + broadcast build + one
-  job ~= the 0.2 s floor.  Plan audited below: BroadcastHashJoin, pruned
-  ReadSchema.  Nothing left to remove.
-- **multimodal_decode** (~0.23 s vs 7 ms): single-stage mapInPandas; cost is
-  the Python worker + Arrow round-trip floor.  The decode itself is the
-  honest stub; plan is one WholeStageCodegen span feeding PythonMapInArrow.
-- **dedup_fuzzy** (~0.5-0.7 s vs 27 ms): 3-consumer shingle self-join.
-  Persisting the shingle frame was measured SLOWER (1.2 s steady: every
-  consumer serializes through a coalesced in-memory relation) than three
-  parallel codegen re-scans — decision documented at operators/dedup.py
-  (exact_jaccard_pairs).  Cost = 3 AQE shuffle stages at the 0.2-0.35 s
-  stage floor.
-- **agg_groupby / join_inner_equi** (~0.5-0.7 s vs 60-75 ms): with AQE off
-  these run in ~0.2 s — the gap IS AQE's per-stage materialization + re-plan
-  latency.  AQE stays on: skew-join splitting and partition coalescing are
-  the at-scale win, and the driver measures the same config we'd ship.
-- **sim_knn_exact / udf_surface** (~0.37-0.38 s): ArrowEvalPython round-trip
-  floor on top of a broadcast cross-score; plan audited below.
-- **dedup_embedding_cosine** (~0.8 s vs 0.1 s): ~1.2 M 64-dim dot products
-  through an Arrow pandas_udf — real compute plus Arrow serialization; the
-  8x ratio is the Python-vectorized tax, bounded and scale-stable.
-- **dedup_minhash_lsh** (1.33 s -> ~0.5 s steady): ReuseExchange was NOT
-  firing (mirrored self-join branches canonicalize differently; 8 parquet
-  scans per run).  Fixed by persisting the shingle + signature + bucket
-  frames (operators/dedup.py _REUSE); the audit below requires
-  InMemoryTableScan in the final plan.
-- **events_funnel** (~1.0 s vs 39 ms): three chained agg->broadcast-join
-  stages = 3x the AQE stage floor; each stage's data is tiny (150 users).
-  The plan (audited below) is the right one at scale: per-user aggs
-  shuffle once on user_id, stage outputs broadcast.
-- **text_quality_gopher** (r6: ~0.63 s steady, down from ~0.95 s): the
-  per-doc bigram mode is now a MAP-ONLY array_sort + aggregate() fold —
-  zero shuffles, zero explodes (the audit below requires !Exchange and
-  !Generate).  The prior shape shuffled the whole exploded bigram corpus
-  twice; at 100 TB the new projection is embarrassingly parallel.  The
-  residual vs the 0.09 s oracle is interpreted-HOF eval + task floors on
-  a 5000-row input.
-- **contamination_ngram_check** (~1.2-1.6 s vs ~0.1-0.15 s): explodes the
-  corpus into 5-grams (~6-8x row amplification) and re-aggregates; 2-3
-  AQE stages plus a generate-heavy scan.  Oracle runs the same explosion
-  in-process; the gap is stage machinery, not a missing optimization
-  (plans show single codegen span per stage, broadcast where expected).
-"""
+
+def audit(spark, registry, name: str, sf: str) -> tuple[list[str], str, str]:
+    """(failed EXPECT entries, checked plan text, executed plan) for one
+    query.  "!substr" means the substring must NOT appear (e.g. no
+    exchange on the join key of a bucketed co-located join)."""
+    df = registry[name].fn(spark, sf)
+    # execute THIS DataFrame's queryExecution (collect, not a write — a
+    # write plans a separate execution): AQE only materializes the final
+    # re-planned stages, and their codegen spans, after an action
+    df.collect()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    # formatted explain re-prints the *initial* adaptive plan; the
+    # executed plan (with final codegen ids) lives on queryExecution
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    plan = buf.getvalue() + "\n== Executed (final adaptive) plan ==\n" + executed
+    bad = [s for s in EXPECT.get(name, []) if not s.startswith("!") and s not in plan]
+    bad += [f"PRESENT(must be absent): {s[1:]}" for s in EXPECT.get(name, [])
+            if s.startswith("!") and s[1:] in plan]
+    return bad, plan, executed
 
 
 def main() -> int:
@@ -588,39 +637,38 @@ def main() -> int:
     registry = load_all()
     spark = get_spark("explain_audit")
     names = args.queries or sorted(EXPECT)
-    failures = 0
-    out = ["# PLANS — audited physical plans (generated by tools/explain_audit.py)\n", PREAMBLE]
+    rows, failures = [], 0
     for name in names:
-        df = registry[name].fn(spark, args.sf)
-        # execute THIS DataFrame's queryExecution (collect, not a write —
-        # a write plans a separate execution): AQE only materializes the
-        # final re-planned stages, and their codegen spans, after an action
-        df.collect()
-        import contextlib
-        import io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        # formatted explain re-prints the *initial* adaptive plan; the
-        # executed plan (with final codegen ids) lives on queryExecution
-        executed = df._jdf.queryExecution().executedPlan().toString()
-        plan += "\n== Executed (final adaptive) plan ==\n" + executed
-        # "!substr" = substring must NOT appear (negative assertion, e.g.
-        # "no exchange on the join key" for bucketed co-located joins)
-        missing = [
-            s for s in EXPECT.get(name, []) if not s.startswith("!") and s not in plan
-        ]
-        present = [s[1:] for s in EXPECT.get(name, []) if s.startswith("!") and s[1:] in plan]
-        bad = missing + [f"PRESENT(must be absent): {s}" for s in present]
-        status = "OK" if not bad else f"MISSING {missing}" if not present else f"BAD {bad}"
-        print(f"[{'PASS' if not bad else 'FAIL'}] {name:26s} {status}")
+        bad, plan, executed = audit(spark, registry, name, args.sf)
+        row = f"| {name} | {'FAIL' if bad else 'PASS'} | {plan_digest(executed)} |"
+        rows.append(row)
+        print(row if not bad else f"{row}\n  {bad}\n{plan}", flush=True)
         failures += bool(bad)
-        out.append(f"\n## {name}\n\n```\n{plan}\n```\n")
-    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
-        f.write("".join(out))
-    print(f"\nwrote PLANS.md; {len(names) - failures}/{len(names)} plan checks passed")
+    print(f"\n{len(names) - failures}/{len(names)} plan checks passed")
+    if not args.queries:
+        tail = ""
+        if os.path.exists(PLANS_MD):
+            with open(PLANS_MD) as f:
+                tail = hand_kept_tail(f.read(), (DIGEST_HEADING,))
+        lines = [
+            "# PLANS — per-query plan-shape digest (tools/explain_audit.py)\n",
+            "One row per registered query: its EXPECT check in",
+            "tools/explain_audit.py and the count of each physical operator in",
+            "its executed final adaptive plan.  `== Initial Plan ==` sections,",
+            "`AQEShuffleRead`, the query-stage wrappers, `AdaptiveSparkPlan`,",
+            "`ColumnarToRow` and `InputAdapter` are not counted, so expression",
+            "ids and coalesced partition counts do not move a row; an AQE",
+            "re-plan that changes a join or an exchange does.  A FAIL row's",
+            "full plan is printed by the run, not kept here.\n",
+            f"{DIGEST_HEADING} ({os.path.basename(args.sf.rstrip('/'))})\n",
+            "| query | check | operators |",
+            "|---|---|---|",
+            *rows,
+            "\n",
+        ]
+        with open(PLANS_MD, "w") as f:
+            f.write("\n".join(lines) + tail)
+        print(f"wrote {PLANS_MD}")
     return 1 if failures else 0
 
 

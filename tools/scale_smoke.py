@@ -259,10 +259,13 @@ def measure(spark, cells: dict[str, str], d1: str, dk: str, k: int) -> list[str]
     return rows
 
 
-def hand_kept_tail(text: str) -> str:
-    """SCALING.md from its first ``## `` heading that this tool does not
-    write, or "" when there is none."""
-    generated = ("## Relational", "## Graph", "## Corpus")
+def hand_kept_tail(
+    text: str, generated: tuple[str, ...] = ("## Relational", "## Graph", "## Corpus")
+) -> str:
+    """``text`` from its first ``## `` heading that does not start with one
+    of ``generated`` (the headings the calling tool writes), or "" when
+    there is none.  SCALING.md and PLANS.md keep their hand-written
+    sections this way."""
     at = 0
     for line in text.splitlines(keepends=True):
         if line.startswith("## ") and not line.startswith(generated):

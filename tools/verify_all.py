@@ -2,7 +2,8 @@
 cheapest-first order and stops at the first failure.
 
     python tools/verify_all.py            # fast gate (~10 min)
-    python tools/verify_all.py --full     # adds sf0.01 parity + bench smoke
+    python tools/verify_all.py --full     # adds sf0.01 parity, plan
+                                          # assertions, bounds, bench smoke
 
 Stages:
   1. driver-contract smoke  (entry() runs, queries()/oracle_sql() sane)
@@ -16,8 +17,14 @@ Stages:
   5. [--full] parity @ sf0.01, 7-way  (partitioning-independence: same
      hashes under a different shuffle layout — the 1000-executor
      reproducibility property)
-  6. [--full] bounds        (rows-only guarantees measured)
-  7. [--full] bench smoke   (all headline queries execute; sf0.001, budgeted)
+  6. [--full] plan assertions  (tools/explain_audit.py: every EXPECT entry
+     holds on its executed plan; rewrites the PLANS.md digest, so a dirty
+     PLANS.md afterwards means a plan shape changed)
+  7. [--full] bounds        (rows-only guarantees measured)
+  8. [--full] bench smoke   (all headline queries execute; sf0.001, budgeted)
+
+tools/evidence_map.py lists the registered queries that no
+CORRECTNESS_r*.json names and the stalest ones.
 """
 
 from __future__ import annotations
@@ -45,56 +52,10 @@ def run(label: str, cmd: list[str], env: dict | None = None) -> None:
     print(f"ok: {label} ({dt:.0f}s)", flush=True)
 
 
-def print_driver_backlog() -> None:
-    """Print the never-driver-checked query set (r4 verdict task 7): the
-    registry names minus every name appearing in any CORRECTNESS_r*.json,
-    split into in-window (DRIVER_PRIORITY) and deferred — so planning the
-    next rotation window is mechanical, not archaeology."""
-    import glob
-    import json
-
-    sys.path.insert(0, REPO)
-    from ub_etl_spark.registry import DRIVER_PRIORITY, load_all
-
-    checked: set[str] = set()
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        try:
-            with open(f) as fh:
-                checked.update(json.load(fh).keys())
-        except Exception:  # noqa: BLE001
-            pass
-    reg = load_all()
-    never = [n for n in reg if n not in checked]
-    in_window = [n for n in DRIVER_PRIORITY if n in never]
-    deferred = [n for n in never if n not in DRIVER_PRIORITY]
-    stale_window = [n for n in DRIVER_PRIORITY if n in checked]
-    print(f"registry: {len(reg)}  driver-checked ever: {len(checked & set(reg))}")
-    print(f"never-checked: {len(never)}")
-    print(f"  in current window ({len(in_window)}):")
-    for n in in_window:
-        print(f"    {n}")
-    print(f"  deferred ({len(deferred)}):")
-    for n in deferred:
-        print(f"    {n}")
-    if stale_window:
-        print(
-            f"  NOTE: {len(stale_window)} window slots repeat already-checked "
-            f"queries: {', '.join(stale_window)}"
-        )
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--full", action="store_true")
-    ap.add_argument(
-        "--driver-backlog",
-        action="store_true",
-        help="print the never-driver-checked query set and exit",
-    )
     args = ap.parse_args()
-    if args.driver_backlog:
-        print_driver_backlog()
-        return
     py = sys.executable
     run(
         "driver contract",
@@ -120,6 +81,9 @@ def main() -> None:
             [py, "tools/parity.py", "--sf", "/root/testdata/sf0.01"],
             env={"SPARK_GRAFT_CPUS": "7"},
         )
+        # fails on any FAIL row; a dirty PLANS.md afterwards means a plan
+        # shape changed
+        run("plan assertions", [py, "tools/explain_audit.py"])
         run("bounds", [py, "tools/bounds.py", "--sf", "/root/testdata/sf0.01"])
         run(
             "bench smoke",

@@ -130,7 +130,6 @@ def coalesce_intervals_arrow(
     key: str,
     start_col: str,
     end_col: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Coalesce overlapping-or-touching [start, end] intervals per key
     into numbered episodes, as ONE vectorized Arrow pass — the 100TB
@@ -263,15 +262,14 @@ def coalesce_intervals_arrow(
             ck, cs, ce, cn, cemitted = carry
             yield emit([ck], [cs], [ce], [cn], [cemitted + 1])
 
-    n_parts = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    # no partition count: AQE coalesces this exchange to the data size,
+    # which it never does for a repartition given an explicit count
     return (
         _require_non_null(
             df.select(F.col(key), F.col(start_col), F.col(end_col)),
             [key, start_col, end_col],
         )
-        .repartition(n_parts, F.col(key))
+        .repartition(F.col(key))
         .sortWithinPartitions(key, start_col, end_col)
         .mapInPandas(stitch, out_schema)
     )

@@ -88,13 +88,11 @@ def upsert_latest_wins(
     Without ``order_by``: updates unconditionally beat existing rows (the
     reference's DO UPDATE SET ... = EXCLUDED.*).
 
-    With ``order_by`` (recency columns, descending): the NEWEST row wins
-    regardless of which side it came from, and on an exact recency tie the
-    existing row is kept — i.e. strict-newer update semantics, matching
-    the Delta MERGE path's lexicographic_newer condition exactly
-    (operators/storage.py), so the two merge_into_table backends agree on
-    every input including stale-batch replays (an older replayed batch can
-    never regress a newer stored row).
+    With ``order_by`` (recency columns, descending, compared
+    lexicographically): the NEWEST row wins regardless of which side it
+    came from, and on an exact recency tie the existing row is kept —
+    strict-newer update semantics, so an older replayed batch can never
+    regress a newer stored row (tests/test_merge.py).
 
     Deterministic as long as (keys + order_by) is a total order per key group.
     """

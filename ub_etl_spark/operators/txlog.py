@@ -1,8 +1,7 @@
 """Minimal transaction log over plain parquet: atomic commits, snapshot
 isolation, and time travel — the table-format concept (Delta/Iceberg) in
-~150 lines, for environments without the jars (operators/storage.py
-dispatches to real Delta when present; this is the self-contained
-fallback that keeps the SEMANTICS testable).
+~150 lines, with no table-format dependency: the self-contained form
+that keeps the SEMANTICS testable.
 
 Design (the standard log-structured table format):
   - data files are immutable parquet parts under the table root;
