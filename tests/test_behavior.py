@@ -260,6 +260,25 @@ def test_entropy_bounds_and_single_type_zero(spark, sf_dir):
     assert rows and all(0.0 <= r.entropy <= hi for r in rows)
 
 
+def test_entropy_plan_has_no_join(spark, sf_dir):
+    """The per-user total is a window sum, not a join back to the counts:
+    with no join in the plan AQE has no broadcast side to pick at run
+    time, so every run executes the same plan, at any partition count."""
+    from ub_etl_spark.queries.behavior import events_user_entropy
+
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    try:
+        for n in ("2", "8"):
+            spark.conf.set(conf, n)
+            df = events_user_entropy(spark, sf_dir)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Join" not in plan, f"{n} shuffle partitions:\n{plan}"
+    finally:
+        spark.conf.set(conf, prev)
+
+
 def test_bitwise_flags_partition_user_weeks(spark, sf_dir):
     """Signature histogram covers every (user, week) cell; single-type
     cells are exactly the power-of-two signatures' AND-nonzero count."""

@@ -44,7 +44,6 @@ for name in {queries!r}:
     registry[name].fn(spark, sf).write.mode("overwrite").format("noop").save()
     out[name] = round(time.perf_counter() - t0, 3)
     release_persisted()
-    spark.catalog.clearCache()
 print("ABRESULT " + json.dumps(out))
 """
 

@@ -344,8 +344,6 @@ def bound_containment_banded(spark, sf) -> dict:
         text_containment_banded,
         text_containment_dedup,
     )
-    from ub_etl_spark.session import release_persisted
-
     exact = {(r.id_a, r.id_b) for r in text_containment_dedup(spark, sf).collect()}
     release_persisted()
     banded = {(r.id_a, r.id_b) for r in text_containment_banded(spark, sf).collect()}
@@ -565,8 +563,6 @@ def bound_equidepth_approx(spark, sf) -> dict:
 
 def bound_ann_pq(spark, sf) -> dict:
     """PQ recall@5 vs exact knn at the registered operating point."""
-    from ub_etl_spark.queries.similarity import _pq_books
-
     emb = load_table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     exact = {
@@ -583,7 +579,6 @@ def bound_ann_pq(spark, sf) -> dict:
             ksub=64,
             shortlist=50,
             query_filter=F.col("vec_id") < 10,
-            books=_pq_books(spark, sf, 16, 64),
         ).collect()
     }
     recall = len(pq & exact) / len(exact)
@@ -730,7 +725,6 @@ def run_sf1_only(out_path: str) -> None:
     for name, fn in SF1_MEASURES.items():
         res = fn(spark, BIG_DIR)
         release_persisted()
-        spark.catalog.clearCache()
         sec[name] = res
         ok &= res["pass"]
         print(f"[{'PASS' if res['pass'] else 'FAIL'}] {name} @sf1: "
@@ -766,11 +760,10 @@ def main() -> None:
     ok = True
     for name, fn in MEASURES.items():
         res = fn(spark, args.sf)
-        # free tracked frames AND the raw .persist(_REUSE) caches the
-        # dedup/LSH operators hold — measurements must not run under a
-        # previous measure's resident cache
+        # free every frame the measure's operators persisted or
+        # checkpointed — measurements must not run under a previous
+        # measure's resident cache
         release_persisted()
-        spark.catalog.clearCache()
         out["bounds"][name] = res
         ok &= res["pass"]
         print(f"[{'PASS' if res['pass'] else 'FAIL'}] {name}: "
@@ -786,7 +779,6 @@ def main() -> None:
         else:
             res = fn(spark, SF01_DIR)
             release_persisted()
-            spark.catalog.clearCache()
         out["bounds_sf0.1"][name] = res
         ok &= res["pass"]
         print(f"[{'PASS' if res['pass'] else 'FAIL'}] {name} @sf0.1: "

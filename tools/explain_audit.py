@@ -35,7 +35,7 @@ sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from scale_smoke import hand_kept_tail  # noqa: E402
 from ub_etl_spark.registry import load_all  # noqa: E402
-from ub_etl_spark.session import get_spark  # noqa: E402
+from ub_etl_spark.session import get_spark, release_persisted  # noqa: E402
 
 PLANS_MD = os.path.join(ROOT, "PLANS.md")
 DIGEST_HEADING = "## Plan shapes"
@@ -68,7 +68,7 @@ EXPECT = {
     "text_fingerprint": ["codegen id :"],  # single shuffle-free projection
     # partition-pruned read: the IN predicate must land in PartitionFilters
     "storage_partitioned_write": ["PartitionFilters: [", "event_type#"],
-    # the shingle+signature subplan is persisted (operators/dedup.py _REUSE):
+    # the shingle+signature subplan is persisted (operators/dedup.py):
     # every consumer after the first must read the in-memory relation, not
     # re-scan parquet
     "dedup_minhash_lsh": ["InMemoryTableScan", "HashAggregate"],
@@ -640,6 +640,7 @@ def main() -> int:
     rows, failures = [], 0
     for name in names:
         bad, plan, executed = audit(spark, registry, name, args.sf)
+        release_persisted()  # each plan is planned alone, as the bench runs it
         row = f"| {name} | {'FAIL' if bad else 'PASS'} | {plan_digest(executed)} |"
         rows.append(row)
         print(row if not bad else f"{row}\n  {bad}\n{plan}", flush=True)

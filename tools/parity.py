@@ -104,11 +104,10 @@ def main() -> int:
         status = "PASS" if ok else "FAIL"
         print(f"[{status}] {name:28s} {dt:6.2f}s  {msg}", flush=True)
         failures += 0 if ok else 1
-        # LSH-family queries persist reuse frames (operators/dedup.py
-        # _REUSE); drop them so a 95-query session doesn't accumulate
-        # cached relations across unrelated queries
+        # free the frames the query persisted or checkpointed, so a
+        # 262-query session doesn't accumulate cached relations across
+        # unrelated queries
         release_persisted()
-        spark.catalog.clearCache()
     print(f"\n{len(names) - failures}/{len(names)} passed")
     return 1 if failures else 0
 

@@ -9,8 +9,8 @@ the evidence that the plans survive scale-up: no accidental cross
 products, no collapse to one partition, no driver-side loops.
 
 A sample is what bench.py times: the registered builder plus a noop-sink
-write.  Persisted frames, the CacheManager and the ANN train-once caches
-are released after every sample, so each one runs the query alone and
+write.  release_persisted() frees every frame the query persisted or
+checkpointed after every sample, so each one runs the query alone and
 cold.  A cell is min-of-2.
 
 Usage: python tools/scale_smoke.py [--k 100] [--graph-k 10] [--corpus-k 10]
@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench import run_once  # noqa: E402
-from ub_etl_spark.queries.similarity import clear_ann_caches  # noqa: E402
 from ub_etl_spark.registry import load_all  # noqa: E402
 from ub_etl_spark.session import get_spark, release_persisted  # noqa: E402
 from ub_etl_spark.sources.tables import load_table  # noqa: E402
@@ -243,8 +242,6 @@ def time_cell(spark, name: str, d: str) -> float:
     for _ in range(2):
         best = min(best, run_once(spark, spec, d))
         release_persisted()
-        spark.catalog.clearCache()
-        clear_ann_caches()
     return best
 
 

@@ -128,7 +128,6 @@ def main() -> int:
         else:
             ok, msg = compare(name, spec, spark, con, BIG_DIR)
         release_persisted()
-        spark.catalog.clearCache()
         print(
             f"[{'PASS' if ok else 'FAIL'}] {name:32s} {time.perf_counter() - t0:6.1f}s  {msg}",
             flush=True,

@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 # 2 decimal digits covers every money/ratio column in the testdata and in
 # the reference DDL (FLOAT ratio columns, user_course_activity_database.sql:11-13).
 DEC = "decimal(18,2)"
-# Products of two DEC values (e.g. price * (1 - discount)) need more scale.
-DEC4 = "decimal(24,4)"
 
 
 def to_dec(c: Column | str, typ: str = DEC) -> Column:
@@ -46,15 +44,6 @@ def davg(c: Column | str, alias: str, typ: str = DEC) -> Column:
 def dmul(a: Column | str, b: Column | str) -> Column:
     """Exact product of two 2-dp doubles (decimal(18,2) x decimal(18,2))."""
     return to_dec(a) * to_dec(b)
-
-
-def sql_dsum(expr: str, alias: str, typ: str = DEC) -> str:
-    """DuckDB-side rendering of dsum for oracle strings."""
-    return f"CAST(SUM(CAST({expr} AS {typ})) AS DOUBLE) AS {alias}"
-
-
-def sql_davg(expr: str, alias: str, typ: str = DEC) -> str:
-    return f"CAST(SUM(CAST({expr} AS {typ})) AS DOUBLE) / COUNT({expr}) AS {alias}"
 
 
 # ---------------------------------------------------------------------------

@@ -20,17 +20,16 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from ub_etl_spark.session import tracked_checkpoint, tracked_persist
 
 # Frames consumed by several branches of one plan (the shingle set feeds the
 # signature aggregate AND both sides of the verify join) are persisted
 # explicitly: Catalyst's ReuseExchange only kicks in when two exchange
 # subplans canonicalize identically, which the mirrored self-join branches
 # here defeat — measured: 8 parquet scans per LSH query without the persist,
-# 2 with it.  MEMORY_AND_DISK so the 100 TB path spills instead of OOMing;
-# re-running the same query hits Spark's CacheManager by canonicalized-plan
-# equality, so repeated calls don't stack copies.
-_REUSE = StorageLevel.MEMORY_AND_DISK
+# 2 with it.  tracked_persist (MEMORY_AND_DISK_DESER, so the 100 TB path
+# spills instead of OOMing) registers each for session.release_persisted().
 
 
 def dedup_exact(df: DataFrame, keys: Sequence[str] | None = None) -> DataFrame:
@@ -189,21 +188,6 @@ def exact_jaccard_pairs(
     return out.select("id_a", "id_b", "n_a", "n_b", "n_common", "jaccard")
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str, text_col: str, n: int = 3, num_perm: int = 16
-) -> DataFrame:
-    """MinHash signature per doc: num_perm seeded xxhash64 minima.
-
-    One explode + one groupBy with num_perm min() aggregates — a single
-    shuffle on doc_id, all JVM-side.  Output: (doc_id, h0..h{num_perm-1}).
-    """
-    sh = shingle_rows(docs, id_col, text_col, n)
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}") for i in range(num_perm)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str,
@@ -238,11 +222,8 @@ def minhash_lsh_pairs(
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}") for i in range(num_perm)
     ] + [F.collect_set(F.xxhash64(F.col("shingle"))).alias("shs")]
-    sig = (
-        sh.groupBy("doc_id")
-        .agg(*aggs)
-        .withColumn("n_sh", F.size("shs"))
-        .persist(_REUSE)  # consumed by the band explode and both verify joins
+    sig = tracked_persist(  # consumed by the band explode and both verify joins
+        sh.groupBy("doc_id").agg(*aggs).withColumn("n_sh", F.size("shs"))
     )
     band_cols = [
         F.struct(
@@ -251,10 +232,9 @@ def minhash_lsh_pairs(
         )
         for b in range(bands)
     ]
-    buckets = (
+    buckets = tracked_persist(  # consumed by both sides of the band self-join
         sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bk"))
         .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-        .persist(_REUSE)  # consumed by both sides of the band self-join
     )
     a = buckets.alias("a")
     b = buckets.alias("b")
@@ -364,15 +344,12 @@ def containment_banded_pairs(
     grams = shingle_rows(
         docs, id_col, text_col, n=n, distinct=False, lower=True, short_docs=False
     ).withColumnRenamed("shingle", "gram")
-    from ub_etl_spark.session import tracked_persist
-
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("gram"))).alias(f"h{i}")
         for i in range(num_perm)
     ] + [F.collect_set(F.xxhash64(F.col("gram"))).alias("gs")]
-    # tracked_persist (not raw .persist) so release_persisted() frees the
-    # widest frame in this plan between harness measurements — consumed
-    # by the band explode and both verify joins
+    # the widest frame in this plan — consumed by the band explode and
+    # both verify joins
     sig = tracked_persist(
         grams.groupBy("doc_id").agg(*aggs).withColumn("n_grams", F.size("gs"))
     )
@@ -446,14 +423,14 @@ def connected_components(
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).dropDuplicates(["src", "dst"])
-    labels = ids.select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
+    labels = tracked_checkpoint(ids.select("id", F.col("id").alias("label")))
     for _ in range(max_iter):
         msgs = edges.join(
             labels.withColumnRenamed("id", "src"), "src"
         ).select(F.col("dst").alias("id"), "label")
-        new_labels = (
+        new_labels = tracked_checkpoint(  # truncate lineage: plan depth stays O(1) per round
             labels.unionByName(msgs).groupBy("id").agg(F.min("label").alias("label"))
-        ).localCheckpoint(eager=True)  # truncate lineage: plan depth stays O(1) per round
+        )
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "id")
@@ -582,7 +559,7 @@ def hamming_pairs(
             )
         ).alias("ck"),
     ).select("doc_id", "sh", F.col("ck.chunk").alias("chunk"), F.col("ck.cv").alias("cv"))
-    chunks = chunks.persist(_REUSE)  # both sides of the chunk self-join
+    chunks = tracked_persist(chunks)  # both sides of the chunk self-join
     a = chunks.alias("a")
     b = chunks.alias("b")
     return (
@@ -647,10 +624,9 @@ def connected_components_star(
     # the final `ids` frame read from it — without this, `ids`' lineage
     # re-runs the (potentially expensive) pair-generation join a second
     # time at the final assignment join
-    e0 = (
+    e0 = tracked_checkpoint(
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .localCheckpoint(eager=True)
     )
     ids = (
         nodes.select(F.col(id_col).alias("id"))
@@ -693,12 +669,12 @@ def connected_components_star(
 
     # invariant: `edges` is symmetric at every loop entry (initialized and
     # reassigned through _sym), so no re-symmetrization inside the round
-    edges = _sym(e0).localCheckpoint(eager=True)
+    edges = tracked_checkpoint(_sym(e0))
     sig = _sig(edges)
     for _ in range(max_iter):
         prev = edges
         edges = _sym(_star(edges, large=True))
-        edges = _sym(_star(edges, large=False)).localCheckpoint(eager=True)
+        edges = tracked_checkpoint(_sym(_star(edges, large=False)))
         new_sig = _sig(edges)
         if new_sig == sig:
             # (count, xor-of-hashes) is probabilistic; confirm the
@@ -775,7 +751,6 @@ def substring_spans(
     (no full window exists), matching the oracle's empty range().
     """
     from ub_etl_spark.operators.intervals import coalesce_token_spans
-    from ub_etl_spark.session import tracked_persist
 
     # r15 MEASURED NON-CHANGE: a round-robin repartition of the tokenized
     # docs (to spread the k-gram hash pass beyond the single-row-group

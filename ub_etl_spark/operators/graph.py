@@ -21,7 +21,7 @@ Scale notes
 - ``bfs_distances`` is level-synchronous frontier expansion like
   hierarchy_flatten_paths: one equi join per level, frontier anti-joined
   against the visited set; rounds are bounded by graph diameter.  Each
-  frontier is persisted so levels never recompute.
+  frontier is tracked_persist()ed so levels never recompute.
 """
 
 from __future__ import annotations
@@ -181,18 +181,18 @@ def bfs_distances(
     """(node, dist) hop distances from the seed set over an undirected
     edge list; unreachable nodes are absent (caller left-joins if a
     dense output is wanted).  Level-synchronous: one join per hop, each
-    frontier persisted; terminates when a frontier drains or max_hops is
-    hit (diameter bound)."""
+    frontier tracked_persist()ed; terminates when a frontier drains or
+    max_hops is hit (diameter bound)."""
     sym = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    visited = seed_nodes.select(
-        F.col("node"), F.lit(0).cast("int").alias("dist")
-    ).persist()
+    visited = tracked_persist(
+        seed_nodes.select(F.col("node"), F.lit(0).cast("int").alias("dist"))
+    )
     frontier = visited
     levels = [visited]
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt = tracked_persist(
             sym.join(frontier, sym.u == frontier.node)
             .select(F.col("v").alias("node"))
             .distinct()
@@ -203,7 +203,6 @@ def bfs_distances(
                 "left_anti",
             )
             .select("node", F.lit(hop).cast("int").alias("dist"))
-            .persist()
         )
         if nxt.isEmpty():
             nxt.unpersist()
@@ -213,8 +212,8 @@ def bfs_distances(
     # leave per-level caches in place for THIS plan's execution (the
     # returned union references every level; unpersisting here would
     # force each level to recompute its whole ancestry — the
-    # hierarchy_flatten_paths convention).  Bench/test sessions clear
-    # caches between passes.
+    # hierarchy_flatten_paths convention).  release_persisted() frees
+    # them once the caller has materialized the result.
     return _union_all(levels)
 
 

@@ -6,9 +6,10 @@ UPDATE`` (scripts/user_course_activity.py:81-102) — one DB round-trip per
 row.  The Spark-native equivalents are set-oriented:
 
   - insert-if-absent  -> left anti-join + union (one shuffle, no per-row IO)
-  - upsert latest-wins -> union + ranking window, or (scale path) partition-
-    scoped overwrite / Delta MERGE when a transactional table format is on
-    the classpath.
+  - upsert latest-wins -> union + ranking window; the scale path is the
+    bucket-scoped rewrite in operators/storage.py (merge_into_bucketed,
+    insert_ignore_into_bucketed), which rewrites only the buckets a batch
+    touches.
 
 At 100 TB the anti-join/window shuffles hash-partition on the merge key, so
 each task holds one key range; AQE splits skewed keys.  The window dedup is

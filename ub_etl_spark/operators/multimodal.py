@@ -22,12 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "doc_id long, payload binary, "
-    "meta struct<n_bytes: bigint, kind: string, content_md5: string>"
-)
-
-
 def with_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Attach an opaque binary payload + typed metadata struct.
 

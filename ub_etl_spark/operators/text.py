@@ -77,16 +77,6 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_scores(text: Column) -> list[Column]:
-    """Per-language stopword-hit counts (the language-ID signal)."""
-    toks = tokens(F.lower(text))
-    out = []
-    for lang, words in STOPWORDS.items():
-        arr = F.array(*[F.lit(w) for w in words])
-        out.append(F.size(F.filter(toks, lambda x: F.array_contains(arr, x))).alias(f"score_{lang}"))
-    return out
-
-
 def lang_id(text: Column) -> Column:
     """Argmax language by stopword hits; deterministic tie-break by the
     fixed language order; 'und' when no stopword hits at all."""

@@ -657,16 +657,18 @@ def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     term QUANTIZES to integer micro-units before the per-user sum (the
     repo-wide rule for ln outputs: a raw double sum of transcendental
     terms is order-dependent; the floor-6dp quantization is the same
-    operating point text_tfidf pins).  Two map-side-combined aggregates
-    sharing the user_id exchange, no window, no join back to the fact."""
+    operating point text_tfidf pins).  The per-user total is a window
+    sum over the (user, event_type) counts, and the window's user_id
+    exchange also serves the final per-user sum: no join, so AQE has no
+    build side to pick at run time and every run executes the same plan
+    (the oracle's counts JOIN tot form let the broadcast side flip)."""
     e = T(spark, sf_dir, "events")
     counts = e.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("c"))
-    tot = counts.groupBy("user_id").agg(F.sum("c").alias("n"))
-    p = F.col("c").cast("double") / F.col("n")
+    n = F.sum("c").over(Window.partitionBy("user_id"))
+    p = F.col("c").cast("double") / n
     term_u = F.floor(-p * F.log(p) * 1e6).cast("long")
     return (
-        counts.join(tot, "user_id")
-        .select("user_id", term_u.alias("term_u"))
+        counts.select("user_id", term_u.alias("term_u"))
         .groupBy("user_id")
         .agg((F.sum("term_u") / 1e6).alias("entropy"))
     )
@@ -1018,9 +1020,9 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ub_etl_spark.session import tracked_persist
 
     li = T(spark, sf_dir, "lineitem")
-    # tracked_persist: the cache is registered so release_persisted() (or
-    # the harness's clearCache between queries) frees it — a bare persist
-    # here would pin the basket arrays for the rest of the session.
+    # tracked_persist: the cache is registered so release_persisted()
+    # frees it — a bare persist here would pin the basket arrays for the
+    # rest of the session.
     arrays = tracked_persist(basket_arrays(li, "l_orderkey", "l_partkey"))
     n_orders = arrays.agg(F.count(F.lit(1)).alias("n"))
     item = (

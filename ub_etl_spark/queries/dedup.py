@@ -143,7 +143,7 @@ def dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rows-only (no oracle): shingle -> 64-perm minhash signature -> "
         "banded bucket self-join + candidate-only Jaccard verify, with the "
         "shingle/signature frames persisted for the two band consumers "
-        "(operators/dedup.py _REUSE); never all-pairs, recall 1.0 pinned in "
+        "(tracked_persist, operators/dedup.py); never all-pairs, recall 1.0 pinned in "
         "BOUNDS.json, 1.2x@10x in SCALING.md; the cost is the signature "
         "build, linear in corpus bytes"
     ),

@@ -77,44 +77,16 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # B4 scale path #2: IVF — deterministic coarse quantizer (hash seeds +
 # distributed Lloyd step), nprobe inverted-list probing, exact re-rank.
 # Rows-only (quantizer has no SQL analogue); recall vs exact knn asserted
-# in tests/test_similarity.py.  The quantizer is cached per corpus dir —
-# IVF's usage shape is train-once / probe-many, and the quantizer is
-# deterministic, so repeated query builds reuse the centroid matrix.
-_IVF_CACHE: dict[tuple[str, int], list] = {}
-
-# Train-once cache audit (r14 verdict task 2 — the sim_ann_pq bench
-# bimodality investigation): bench.py records these counters into its
-# detail sidecar so an artifact shows how many samples paid codebook /
-# centroid training vs reused it.  Counters, not booleans: a cache that
-# unexpectedly misses on every pass (e.g. a keying bug after a refactor)
-# would read misses==passes here and name itself.
-CACHE_STATS = {"ivf_hits": 0, "ivf_misses": 0, "pq_hits": 0, "pq_misses": 0}
+# in tests/test_similarity.py.  Every build trains its own quantizer: no
+# memo carries a trained quantizer from one call to the next, so each
+# bench sample pays the same plan.  A session that wants train-once /
+# probe-many passes ``centroids=`` (from V.ivf_centroids) itself.
 
 
 def clear_ann_caches() -> None:
-    """Drop the train-once codebook/centroid memos (counters stay).
-
-    r15 verdict task 5: the bench's min-of-passes methodology plus a
-    cross-pass Python memo gave sim_ann_ivf / sim_ann_pq a warm-only
-    committed minimum no other query gets (r15 driver samples: [4.25,
-    3.05, 1.32, 1.14] = 1 miss / 3 hits).  bench.py now calls this at
-    the START of every pass, so each sample pays centroid/codebook
-    training like every other query pays its own plan — the committed
-    min is a cold number (ann_cache_stats: misses == samples).  The
-    cache itself stays: train-once / probe-many is the operator's real
-    usage shape (tests and ad-hoc sessions still benefit)."""
-    _IVF_CACHE.clear()
-    _PQ_CACHE.clear()
-
-
-def _ivf_cents(spark: SparkSession, sf_dir: str, nlist: int):
-    key = (sf_dir, nlist)
-    if key not in _IVF_CACHE:
-        CACHE_STATS["ivf_misses"] += 1
-        _IVF_CACHE[key] = V.ivf_centroids(T(spark, sf_dir, "embeddings"), nlist=nlist)
-    else:
-        CACHE_STATS["ivf_hits"] += 1
-    return _IVF_CACHE[key]
+    """No-op, kept because existing callers import it: the ANN builders
+    hold no trained quantizer between calls, so there is nothing to
+    clear."""
 
 
 # nprobe=12/16 is an unusually high probe ratio: the synthetic embeddings
@@ -131,7 +103,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         nlist=16,
         nprobe=12,
         query_filter=F.col("vec_id") < 10,
-        centroids=_ivf_cents(spark, sf_dir, 16),
     )
 
 
@@ -334,22 +305,9 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANN trio (hyperplane LSH / IVF inverted lists / PQ compressed codes),
 # and composes with IVF as IVF-PQ at 1e9+ vectors.  Rows-only (the
 # quantizer has no SQL analogue); recall vs exact knn pinned in
-# tests/test_similarity.py.  Codebooks cached per corpus dir — PQ's
-# usage shape is train-once / encode-and-probe-many, and the trainer
-# is deterministic (hash seeds + fixed-point Lloyd like IVF).
-_PQ_CACHE: dict[tuple[str, int, int], list] = {}
-
-
-def _pq_books(spark: SparkSession, sf_dir: str, m: int, ksub: int):
-    key = (sf_dir, m, ksub)
-    if key not in _PQ_CACHE:
-        CACHE_STATS["pq_misses"] += 1
-        _PQ_CACHE[key] = V.pq_codebooks(
-            T(spark, sf_dir, "embeddings"), dim=64, m=m, ksub=ksub
-        )
-    else:
-        CACHE_STATS["pq_hits"] += 1
-    return _PQ_CACHE[key]
+# tests/test_similarity.py.  Every build trains its codebooks (hash seeds
+# + fixed-point Lloyd like IVF, so deterministic); a session that
+# encodes-and-probes many times passes ``books=`` (from V.pq_codebooks).
 
 
 # m=16 subspaces x 64 centroids = 6-bit codes x 16 = 12 bytes/vector, a
@@ -366,8 +324,8 @@ def _pq_books(spark: SparkSession, sf_dir: str, m: int, ksub: int):
         "batch-local exact top-shortlist pruning), exact re-rank join with "
         "the shortlist broadcast + top-k; per-job floors plus one Arrow stage "
         "dominate at bench scale (2000 vectors). Every bench sample pays "
-        "codebook training: bench.py clears the ANN caches at every pass "
-        "(misses == samples in ann_cache_stats). Training costs ~+1.0 s "
+        "codebook training: the builder keeps no trained codebooks between "
+        "calls. Training costs ~+1.0 s "
         "(same-session cold 1.90/2.11 s vs warm 1.00-1.17 s), so the row "
         "reads ~2.5-3.5 s cold (samples [3.45, 3.59, 2.79]) against a warm "
         "1.1-1.5 s envelope. A 4.2-4.6 s slow mode is PQ-plan-specific, not a "
@@ -393,5 +351,4 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ksub=64,
         shortlist=50,
         query_filter=F.col("vec_id") < 10,
-        books=_pq_books(spark, sf_dir, 16, 64),
     )

@@ -135,16 +135,17 @@ def refuse_extra_conf(tool: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Query-level cache tracking
+# Query-held state
 # ---------------------------------------------------------------------------
-# Some query builders persist a shared intermediate (basket arrays, edge
-# lists, BFS frontiers) because several branches of one plan consume it.
-# The builder returns a lazy DataFrame, so it cannot unpersist before the
-# caller materializes the result — bench.py and tools/parity.py call
-# spark.catalog.clearCache() between queries, but a long-lived ad-hoc
-# session would otherwise accumulate cached blocks.  tracked_persist()
-# registers every such cache so release_persisted() frees exactly the
-# query-level ones without nuking caches the caller owns.
+# Some query builders hold an intermediate (basket arrays, edge lists, BFS
+# frontiers, LSH signatures) because several branches of one plan consume
+# it, or cut an iterative plan's lineage with a local checkpoint.  The
+# builder returns a lazy DataFrame, so it cannot free that state before
+# the caller materializes the result.  Every such frame goes through
+# tracked_persist() or tracked_checkpoint(), and release_persisted() is
+# the one release path: after it returns, the query holds no persisted
+# RDD and no CacheManager entry, so a harness needs no clearCache() and
+# caches the caller owns survive.
 
 _TRACKED_PERSISTED: list = []
 
@@ -156,22 +157,39 @@ def tracked_persist(df):
     them all with release_persisted() after the query is materialized.
     """
     df = df.persist()
-    _TRACKED_PERSISTED.append(df)
+    _TRACKED_PERSISTED.append(df.unpersist)
+    return df
+
+
+def tracked_checkpoint(df):
+    """Eager local checkpoint of ``df``, registered for release_persisted().
+
+    The checkpoint cuts lineage: an iterative builder (label propagation,
+    star contraction) keeps its plan depth O(1) per round instead of
+    embedding the previous round's tree.  The checkpointed blocks live in
+    the RDD under the returned frame's LogicalRDD, which neither
+    ``unpersist`` nor ``clearCache`` reaches, so that RDD is what gets
+    registered.  The blocks are the only copy of the data: materialize
+    every frame built on the checkpoint before release_persisted().
+    """
+    df = df.localCheckpoint(eager=True)
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    _TRACKED_PERSISTED.append(lambda: rdd.unpersist(False))
     return df
 
 
 def release_persisted() -> int:
-    """Unpersist every tracked_persist() frame; returns how many were freed.
+    """Free every tracked frame; returns how many were released.
 
-    Safe to call at any time (unpersist is idempotent, already-freed and
-    stale-session frames are skipped).  Harness entry points call this next
-    to spark.catalog.clearCache() after materializing each query.
+    Safe to call at any time (releasing is idempotent; already-freed and
+    stale-session frames are skipped).  Harness entry points call this
+    after materializing each query.
     """
     n = 0
     while _TRACKED_PERSISTED:
-        df = _TRACKED_PERSISTED.pop()
+        release = _TRACKED_PERSISTED.pop()
         try:
-            df.unpersist()
+            release()
             n += 1
         except Exception:
             pass
