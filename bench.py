@@ -141,9 +141,9 @@ def driver_line(detail: dict, detail_file: str) -> str:
     """The printed line as a pure view of the detail sidecar, compact JSON
     of at most DRIVER_LINE_CAP chars.  ``queries`` carries per-query
     seconds in descending order and is trimmed from the cheap end until the
-    line fits, so the expensive head survives; if the line is still too
-    long with ``queries`` empty, ``extra_conf`` is truncated (its full
-    value stays in the sidecar)."""
+    line fits, so the expensive head survives (``n_q_emitted`` says how
+    many are left); if the line is still too long with ``queries`` empty,
+    ``extra_conf`` is truncated (its full value stays in the sidecar)."""
     line = {
         "metric": detail["metric"],
         "value": detail["value"],
@@ -175,6 +175,7 @@ def driver_line(detail: dict, detail_file: str) -> str:
         ),
         # engine side only; the oracle-side median stays in the sidecar
         "median_delta_vs_prev": detail["median_delta_vs_prev"],
+        "n_q_emitted": 0,  # how many of ``queries`` survive the trim; set in dump()
         "queries": {
             n: round(s, 2)
             for n, s in sorted(detail["queries"].items(), key=lambda kv: (-kv[1], kv[0]))
@@ -187,6 +188,7 @@ def driver_line(detail: dict, detail_file: str) -> str:
         line["extra_conf"] = detail["extra_conf"]
 
     def dump() -> str:
+        line["n_q_emitted"] = len(line["queries"])
         return json.dumps(line, separators=(",", ":"))
 
     out = dump()

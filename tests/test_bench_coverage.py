@@ -182,7 +182,7 @@ def test_driver_line_fits_with_oversized_extra_conf():
     out = mod.driver_line(_synthetic_detail(262, "k=" + "v" * 4998), "d.json")
     parsed = json.loads(out)
     assert len(out) <= 1940
-    assert parsed["queries"] == {}
+    assert parsed["queries"] == {} and parsed["n_q_emitted"] == 0
     assert parsed["extra_conf"].startswith("k=vvv")
     assert parsed["n_queries"] == 262
 
@@ -201,7 +201,7 @@ def test_driver_line_key_set_is_pinned():
         "n_floor_adjacent", "n_unexplained_over_2x_floor_adj",
         "load_avg_1m_per_pass", "n_over_abs_gate_undocumented",
         "n_budget_truncated", "n_regressed_2x_vs_prev",
-        "median_delta_vs_prev", "queries", "detail_file",
+        "median_delta_vs_prev", "n_q_emitted", "queries", "detail_file",
     ]
     mod = _bench()
     parsed = json.loads(mod.driver_line(_synthetic_detail(262, None), "d.json"))
@@ -212,3 +212,4 @@ def test_driver_line_key_set_is_pinned():
     assert secs and secs == sorted(secs, reverse=True)
     assert max(secs) == 2.71  # the slowest synthetic query survives the trim
     assert parsed["n_regressed_2x_vs_prev"] == 5  # capped at the worst five
+    assert 0 < parsed["n_q_emitted"] == len(parsed["queries"]) < 262

@@ -8,6 +8,8 @@ and designed for 100 TB scale.
 
 Layout:
     session.py        SparkSession factory with scale-aware defaults
+    _zip_imports.py   zip archives on sys.path re-read only when changed
+                      (PySpark workers invalidate import caches per task)
     sources/          table loaders + custom sources (paginated REST)
     functions/        column-expression helpers (exact arithmetic, text, vectors)
     operators/        reusable engine operators (dedup, merge, similarity, ...)
@@ -16,5 +18,7 @@ Layout:
     streaming/        Structured Streaming operators (windows, dedup, upsert)
     registry.py       query-name -> (builder, oracle) registry
 """
+
+from ub_etl_spark import _zip_imports  # noqa: F401  (installs the zip re-read skip)
 
 __version__ = "0.1.0"

@@ -323,13 +323,14 @@ def merge_into_bucketed(
     ``updates`` is evaluated once (module docstring): it is bucketed and
     persisted, the touched buckets are collected from the persisted
     frame, and the merge reads it again from the cache, so every stored
-    row of a touched bucket is kept or replaced by a newer one.  On a
-    Python DataSource a second evaluation would cost as much as a whole
-    small batch's read: a scan has a fixed cost of 0.75-1 s even for one
-    row (0.25-0.3 s of it driver-side planning; 4-core box, PySpark
-    4.1.2), while a 10-page REST batch's whole fetch takes about 0.9 s.  A
-    lost executor recomputes the batch from its source (the cache is not
-    a checkpoint).
+    row of a touched bucket is kept or replaced by a newer one.  A second
+    evaluation of a live source refetches it and can see different rows;
+    on a REST DataSource it also costs as much as the batch's first read:
+    a one-row scan plus a noop write takes about 0.09 s and a 10-page
+    read of 100-row pages about 0.11 s, and etl_refresh's traced batch
+    fetch (perfbench rest.fetch_s) about 0.14 s (4-core box, PySpark
+    4.1.2, worker import caches kept by _zip_imports).  A lost executor
+    recomputes the batch from its source (the cache is not a checkpoint).
 
     One shuffle per side, none before the write (_merged_buckets)."""
     with _bucketed_once(updates, keys, n_buckets) as (upd, touched):
