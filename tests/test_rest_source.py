@@ -5,12 +5,20 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import parse_qs, urlparse
 
 import pytest
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ub_etl_spark.sources.rest import RestPaginatedDataSource
+from ub_etl_spark.sources.rest import (
+    PageRange,
+    RestCursorStreamReader,
+    RestPaginatedDataSource,
+    RestPaginatedReader,
+    RestStreamReader,
+)
 
 N_PAGES = 7
 PAGE_SIZE = 5
@@ -350,5 +358,77 @@ def test_rest_cursor_stream_restarts_long_chain(spark, tmp_path):
         assert sorted(got) == list(range(50 * PAGE_SIZE))
         assert len(got) == len(set(got))  # exactly once across restarts
         assert len(n_nonempty) >= 5  # incremental, not one giant pull
+    finally:
+        server.shutdown()
+
+
+# built without a session: the tests below drive the readers directly
+_SCHEMA = StructType([StructField("rec_id", LongType()), StructField("name", StringType())])
+
+
+class _LoggingHandler(StubHandler):
+    """StubHandler that records `time.monotonic()` as each request arrives."""
+
+    hits: list[float] = []
+
+    def do_GET(self):
+        type(self).hits.append(time.monotonic())
+        super().do_GET()
+
+
+def test_rest_source_zero_pages_reads_nothing():
+    """pages=0 plans one empty page range, reads no rows and sends no
+    request; a negative page count is rejected by name."""
+    StubHandler.fail_first_hits = {}
+    _LoggingHandler.hits = []
+    server = _serve(_LoggingHandler)
+    try:
+        url = f"http://127.0.0.1:{server.server_port}/api"
+        r = RestPaginatedReader(_SCHEMA, {"url": url, "pages": "0", "partitions": "4"})
+        parts = r.partitions()
+        assert parts == [PageRange(1, 1)]
+        assert [row for p in parts for row in r.read(p)] == []
+        assert _LoggingHandler.hits == []
+        with pytest.raises(ValueError, match="pages"):
+            RestPaginatedReader(_SCHEMA, {"url": url, "pages": "-1"}).partitions()
+    finally:
+        server.shutdown()
+
+
+def _batch_reader_pages(url, options):
+    r = RestPaginatedReader(_SCHEMA, {"url": url, "pages": "3", **options})
+    return list(r.read(PageRange(1, 4)))
+
+
+def _page_stream_pages(url, options):
+    r = RestStreamReader(_SCHEMA, {"url": url, "pages_per_batch": "3", **options})
+    return list(r.read(r.initialOffset())[0])
+
+
+def _cursor_stream_pages(url, options):
+    url = f"{url}?page=1&page_size={PAGE_SIZE}"
+    r = RestCursorStreamReader(_SCHEMA, {"url": url, "pages_per_batch": "3", **options})
+    return list(r.read(r.initialOffset())[0])
+
+
+@pytest.mark.parametrize(
+    "read_three_pages", [_batch_reader_pages, _page_stream_pages, _cursor_stream_pages]
+)
+def test_rest_readers_pace_requests(read_three_pages):
+    """min_request_interval_s spaces consecutive requests of every reader:
+    the batch reader over one page range and both stream readers' reads."""
+    interval, eps = 0.05, 0.01
+    StubHandler.fail_first_hits = {}
+    _LoggingHandler.hits = []
+    server = _serve(_LoggingHandler)
+    try:
+        url = f"http://127.0.0.1:{server.server_port}/api"
+        options = {"page_size": str(PAGE_SIZE), "min_request_interval_s": str(interval)}
+        rows = read_three_pages(url, options)
+        assert [rid for rid, _ in rows] == list(range(3 * PAGE_SIZE))
+        hits = _LoggingHandler.hits
+        assert len(hits) == 3
+        gaps = [b - a for a, b in zip(hits, hits[1:])]
+        assert min(gaps) >= interval - eps, gaps
     finally:
         server.shutdown()

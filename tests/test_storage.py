@@ -272,6 +272,29 @@ def test_delete_where_drains_hive_escaped_partition(spark, tmp_path):
     assert dirs_after == {"part=plain"}
 
 
+def test_delete_where_leaves_session_conf_alone(spark, table_dir, monkeypatch):
+    """Dynamic overwrite is an option of the one write: the delete sets no
+    session conf, so concurrent queries never run with it flipped."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from ub_etl_spark.operators.storage import delete_where_partitioned
+
+    df = spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], "id bigint, part string")
+    path = os.path.join(table_dir, "t4")
+    df.write.partitionBy("part").parquet(path)
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    assert delete_where_partitioned(spark, path, "part", F.col("id") == 1) == ["a"]
+    assert calls == []
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == [2, 3]
+
+
 def test_hot_bucket_write_rolls_files_at_max_records(spark, table_dir, monkeypatch):
     """r15 verdict task 6 (guide §5/§6): the one-task-per-bucket write
     layout must not produce an unbounded single FILE for a hot bucket at

@@ -397,13 +397,12 @@ def delete_where_partitioned(
 
     hit_paths = [_local(r["__f"]) for r in hit]
     survivors = base.filter(F.col(part_col).isin(affected) & ~predicate)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        survivors.write.partitionBy(part_col).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set(mode_key, prev)
+    (
+        survivors.write.partitionBy(part_col)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")  # this write only, not the session
+        .parquet(path)
+    )
     # dynamic overwrite REPLACED every partition with surviving rows (their
     # old files are gone); a partition drained to zero rows was not
     # rewritten, so its old files — which contained deleted rows — are

@@ -135,6 +135,35 @@ def courses_from_pages(pages: DataFrame) -> DataFrame:
     return pages.select(F.explode("results").alias("c")).select("c.*")
 
 
+def _dim_and_bridge(courses: DataFrame, struct_col: str, fk: str) -> tuple[DataFrame, DataFrame]:
+    """The {id, title, url} dim of one {title, url} struct column and its
+    (course_id, fk) bridge (A8/A9; scripts/course_catalog.py:111-120).
+
+    The dim key is title alone, matching the reference's get_or_insert
+    lookup (scripts/course_catalog.py:69-71): a title must never map to
+    two surrogate ids, or the title-keyed bridge join fans out.  min(url)
+    is the deterministic stand-in for the reference's first-writer-wins
+    url.
+    """
+    title = F.col(f"{struct_col}.title").alias("title")
+    src = (
+        courses.select(title, F.col(f"{struct_col}.url").alias("url"))
+        .filter(F.col("title").isNotNull())
+        .groupBy("title")
+        .agg(F.min("url").alias("url"))
+    )
+    dim = build_dim(src, ["title", "url"], contiguous=True).withColumnRenamed(
+        "dim_id", "id"
+    ).select("id", "title", "url")
+    bridge = (
+        courses.select(F.col("id").alias("course_id"), title)
+        .join(F.broadcast(dim), "title", "inner")
+        .select("course_id", F.col("id").alias(fk))
+        .dropDuplicates(["course_id", fk])
+    )
+    return dim, bridge
+
+
 def normalize(courses: DataFrame) -> dict[str, DataFrame]:
     """Nested course documents -> the 13 relational tables.
 
@@ -170,48 +199,10 @@ def normalize(courses: DataFrame) -> dict[str, DataFrame]:
         F.col("locale.locale").alias("locale"),
     )
 
-    # dims + bridges (A8/A9; scripts/course_catalog.py:111-120)
-    # dim key is title alone, matching the reference's get_or_insert lookup
-    # (scripts/course_catalog.py:69-71): a title must never map to two
-    # surrogate ids, or the title-keyed bridge join below fans out.
-    # min(url) is the deterministic stand-in for the reference's
-    # first-writer-wins url.
-    cat_src = (
-        courses.select(
-            F.col("primary_category.title").alias("title"),
-            F.col("primary_category.url").alias("url"),
-        )
-        .filter(F.col("title").isNotNull())
-        .groupBy("title")
-        .agg(F.min("url").alias("url"))
-    )
-    categories = build_dim(cat_src, ["title", "url"], contiguous=True).withColumnRenamed(
-        "dim_id", "id"
-    ).select("id", "title", "url")
-    course_categories = (
-        courses.select(cid, F.col("primary_category.title").alias("title"))
-        .join(F.broadcast(categories), "title", "inner")
-        .select("course_id", F.col("id").alias("category_id"))
-        .dropDuplicates(["course_id", "category_id"])
-    )
-
-    sub_src = (
-        courses.select(
-            F.col("primary_subcategory.title").alias("title"),
-            F.col("primary_subcategory.url").alias("url"),
-        )
-        .filter(F.col("title").isNotNull())
-        .groupBy("title")
-        .agg(F.min("url").alias("url"))
-    )
-    subcategories = build_dim(sub_src, ["title", "url"], contiguous=True).withColumnRenamed(
-        "dim_id", "id"
-    ).select("id", "title", "url")
-    course_subcategories = (
-        courses.select(cid, F.col("primary_subcategory.title").alias("title"))
-        .join(F.broadcast(subcategories), "title", "inner")
-        .select("course_id", F.col("id").alias("subcategory_id"))
-        .dropDuplicates(["course_id", "subcategory_id"])
+    # dims + bridges
+    categories, course_categories = _dim_and_bridge(courses, "primary_category", "category_id")
+    subcategories, course_subcategories = _dim_and_bridge(
+        courses, "primary_subcategory", "subcategory_id"
     )
 
     # array-of-struct children (A4; scripts/course_catalog.py:123-130,159-161)

@@ -12,10 +12,13 @@ Spark-native design:
   - **retry with bounded backoff** per request inside the partition
     reader (classes of the reference's handle_http_error: retryable
     statuses get exponential backoff, capped; others raise).
-  - **token-bucket pacing** per partition replaces the global modulo
+  - **token-bucket pacing** per reader replaces the global modulo
     sleeps: `min_request_interval_s` bounds request rate per reader.
   - cursor-style APIs (opaque `next` URLs) degrade to a single partition
     (cursor chains are inherently serial); offset/page APIs parallelize.
+
+Every reader sends its requests through one `_Client`: page-URL
+building, pacing, retry, `next`-link following and row projection.
 
 Registration:
     spark.dataSource.register(RestPaginatedDataSource)
@@ -26,6 +29,23 @@ Registration:
           .option("page_size", 20)
           .option("partitions", 8)         # page-ranges fetched in parallel
           .load())
+
+Options:
+    url                     endpoint (required)
+    pages                   pages to fetch in batch page mode (default 1;
+                            0 reads nothing, negative is an error)
+    page_size               records per page (default 20)
+    partitions              batch page-ranges fetched in parallel (default 4)
+    backoff_s               first retry delay, doubled per retry (default 0.1)
+    min_request_interval_s  pacing: least seconds between two requests of
+                            one reader (default 0, no pacing)
+    mode                    "pages" or "cursor" (default "pages")
+    max_pages               batch cursor mode request cap (default 10000)
+    pages_per_batch         streaming pages per micro-batch (default 10)
+
+Constants: TIMEOUT_S (10.0 s per request), MAX_RETRIES (3),
+RESULTS_KEY ("results", the record list) and NEXT_KEY ("next", the link
+to the following page).
 
 Streaming (`spark.readStream.format("rest_paginated")`): a
 SimpleDataSourceStreamReader whose checkpointed offset IS the page
@@ -52,6 +72,7 @@ import time
 import urllib.error
 import urllib.request
 from dataclasses import dataclass
+from urllib.parse import urljoin
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -61,6 +82,10 @@ from pyspark.sql.datasource import (
 )
 
 RETRYABLE_STATUSES = {429, 503, 524}  # scripts/user_course_activity.py:165-178
+TIMEOUT_S = 10.0
+MAX_RETRIES = 3
+RESULTS_KEY = "results"
+NEXT_KEY = "next"
 
 
 @dataclass
@@ -96,29 +121,64 @@ def fetch_json(url: str, timeout: float, max_retries: int, backoff_s: float):
         attempt += 1
 
 
-class RestPaginatedReader(DataSourceReader):
+class _Client:
+    """The request path all three readers share.  Pacing state lives here,
+    so it is per reader instance: each batch task unpickles its own reader
+    and paces its own page range; a stream reader paces across batches."""
+
     def __init__(self, schema, options):
-        self.schema_ = schema
         self.url = options["url"]
-        self.pages = int(options.get("pages", 1))
         self.page_size = int(options.get("page_size", 20))
-        self.n_partitions = int(options.get("partitions", 4))
-        self.timeout = float(options.get("timeout", 10.0))
-        self.max_retries = int(options.get("max_retries", 3))
         self.backoff_s = float(options.get("backoff_s", 0.1))
         self.min_interval = float(options.get("min_request_interval_s", 0.0))
-        self.results_key = options.get("results_key", "results")
+        self.fields = [f.name for f in schema.fields]
+        self.last_request = 0.0
+
+    def page(self, n: int) -> str:
+        sep = "&" if "?" in self.url else "?"
+        return f"{self.url}{sep}page={n}&page_size={self.page_size}"
+
+    def get(self, url: str):
+        # token-bucket pacing (replaces modulo sleeps,
+        # scripts/course_catalog.py:216-221)
+        if self.min_interval > 0:
+            wait = self.min_interval - (time.monotonic() - self.last_request)
+            if wait > 0:
+                time.sleep(wait)
+        self.last_request = time.monotonic()
+        return fetch_json(url, TIMEOUT_S, MAX_RETRIES, self.backoff_s)
+
+    def rows(self, data) -> list[tuple]:
+        return [tuple(rec.get(f) for f in self.fields) for rec in data.get(RESULTS_KEY, [])]
+
+    @staticmethod
+    def next_url(url: str, data) -> str | None:
+        """The absolute link after `url`'s page, or None at the chain's end."""
+        nxt = data.get(NEXT_KEY)
+        return urljoin(url, nxt) if nxt else None
+
+    def walk(self, url: str, limit: int):
+        """Follow up to `limit` links; yield (url, data) per request."""
+        for _ in range(limit):
+            data = self.get(url)
+            yield url, data
+            url = self.next_url(url, data)
+            if url is None:
+                return
+
+
+class RestPaginatedReader(DataSourceReader):
+    def __init__(self, schema, options):
+        self.client = _Client(schema, options)
+        self.pages = int(options.get("pages", 1))
+        if self.pages < 0:
+            raise ValueError(f"rest_paginated option 'pages' must be >= 0, got {self.pages}")
+        self.n_partitions = int(options.get("partitions", 4))
         self.mode = options.get("mode", "pages")  # "pages" | "cursor"
-        self.next_key = options.get("next_key", "next")
         # cursor mode: hard request cap so a server that always returns a
-        # `next` link can't loop the reader forever.  The default must NOT
-        # fall back to `pages` (its default of 1 would silently stop after
-        # one request); cursor APIs advertise no page count, so the cap is
-        # the only bound.
-        if "max_pages" in options:
-            self.max_pages = int(options["max_pages"])
-        else:
-            self.max_pages = self.pages if self.mode == "pages" else 10000
+        # `next` link can't loop the reader forever.  Cursor APIs advertise
+        # no page count, so the cap must not fall back to `pages`.
+        self.max_pages = int(options.get("max_pages", 10000))
 
     def partitions(self):
         if self.mode == "cursor":
@@ -126,47 +186,22 @@ class RestPaginatedReader(DataSourceReader):
             # partition rather than fabricating page numbers the API never
             # promised (doc header; reference pagination contract
             # scripts/course_catalog.py:204-208)
-            return [CursorChain(self.url)]
+            return [CursorChain(self.client.url)]
         n = max(1, min(self.n_partitions, self.pages))
-        per = (self.pages + n - 1) // n
+        per = max(1, (self.pages + n - 1) // n)
+        # pages=0 reads nothing, through one empty range
         return [
             PageRange(start, min(start + per, self.pages + 1))
             for start in range(1, self.pages + 1, per)
-        ]
-
-    def _pace(self, last_request: float) -> float:
-        # token-bucket pacing (replaces modulo sleeps,
-        # scripts/course_catalog.py:216-221)
-        if self.min_interval > 0:
-            wait = self.min_interval - (time.monotonic() - last_request)
-            if wait > 0:
-                time.sleep(wait)
-        return time.monotonic()
+        ] or [PageRange(1, 1)]
 
     def read(self, partition):
-        fields = [f.name for f in self.schema_.fields]
-        last_request = 0.0
         if isinstance(partition, CursorChain):
-            from urllib.parse import urljoin
-
-            url = partition.start_url
-            for _ in range(self.max_pages):
-                last_request = self._pace(last_request)
-                data = fetch_json(url, self.timeout, self.max_retries, self.backoff_s)
-                for rec in data.get(self.results_key, []):
-                    yield tuple(rec.get(f) for f in fields)
-                nxt = data.get(self.next_key)
-                if not nxt:
-                    return
-                url = urljoin(url, nxt)
+            for _, data in self.client.walk(partition.start_url, self.max_pages):
+                yield from self.client.rows(data)
             return
         for page in range(partition.start_page, partition.end_page):
-            last_request = self._pace(last_request)
-            sep = "&" if "?" in self.url else "?"
-            url = f"{self.url}{sep}page={page}&page_size={self.page_size}"
-            data = fetch_json(url, self.timeout, self.max_retries, self.backoff_s)
-            for rec in data.get(self.results_key, []):
-                yield tuple(rec.get(f) for f in fields)
+            yield from self.client.rows(self.client.get(self.client.page(page)))
 
 
 class RestStreamReader(SimpleDataSourceStreamReader):
@@ -185,40 +220,27 @@ class RestStreamReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, schema, options):
-        self.schema_ = schema
-        self.url = options["url"]
-        self.page_size = int(options.get("page_size", 20))
+        self.client = _Client(schema, options)
         self.pages_per_batch = int(options.get("pages_per_batch", 10))
-        self.timeout = float(options.get("timeout", 10.0))
-        self.max_retries = int(options.get("max_retries", 3))
-        self.backoff_s = float(options.get("backoff_s", 0.1))
-        self.results_key = options.get("results_key", "results")
-        self.next_key = options.get("next_key", "next")
 
     def initialOffset(self) -> dict:
         return {"page": 1}
 
-    def _fetch_page(self, page: int):
-        sep = "&" if "?" in self.url else "?"
-        url = f"{self.url}{sep}page={page}&page_size={self.page_size}"
-        return fetch_json(url, self.timeout, self.max_retries, self.backoff_s)
-
     def read(self, start: dict):
-        fields = [f.name for f in self.schema_.fields]
         first = start["page"]
         rows: list[tuple] = []
         page = first
         while page < first + self.pages_per_batch:
-            data = self._fetch_page(page)
-            recs = data.get(self.results_key, [])
-            if not recs and not data.get(self.next_key):
+            data = self.client.get(self.client.page(page))
+            recs = self.client.rows(data)
+            if not recs and not data.get(NEXT_KEY):
                 # drained: do NOT consume this page — the offset pins here,
                 # which is what lets trigger(availableNow) terminate and a
                 # processing-time trigger pick up pages published later
                 break
-            rows.extend(tuple(rec.get(f) for f in fields) for rec in recs)
+            rows.extend(recs)
             page += 1
-            if not data.get(self.next_key):
+            if not data.get(NEXT_KEY):
                 break
         if page == first:
             return iter(()), start
@@ -226,11 +248,8 @@ class RestStreamReader(SimpleDataSourceStreamReader):
 
     def readBetweenOffsets(self, start: dict, end: dict):
         """Deterministic replay of [start.page, end.page) after recovery."""
-        fields = [f.name for f in self.schema_.fields]
         for page in range(start["page"], end["page"]):
-            data = self._fetch_page(page)
-            for rec in data.get(self.results_key, []):
-                yield tuple(rec.get(f) for f in fields)
+            yield from self.client.rows(self.client.get(self.client.page(page)))
 
 
 class RestCursorStreamReader(SimpleDataSourceStreamReader):
@@ -249,89 +268,54 @@ class RestCursorStreamReader(SimpleDataSourceStreamReader):
     (cursor APIs extend the chain at the tail)."""
 
     def __init__(self, schema, options):
-        self.schema_ = schema
-        self.url = options["url"]
+        self.client = _Client(schema, options)
         self.pages_per_batch = int(options.get("pages_per_batch", 10))
-        self.timeout = float(options.get("timeout", 10.0))
-        self.max_retries = int(options.get("max_retries", 3))
-        self.backoff_s = float(options.get("backoff_s", 0.1))
-        self.results_key = options.get("results_key", "results")
-        self.next_key = options.get("next_key", "next")
 
     def initialOffset(self) -> dict:
-        return {"url": self.url, "done": False}
+        return {"url": self.client.url, "done": False}
 
-    def _walk(self, url: str, limit: int):
-        """Follow up to `limit` links; yield (url, data) per request."""
-        from urllib.parse import urljoin
-
-        for _ in range(limit):
-            data = fetch_json(url, self.timeout, self.max_retries, self.backoff_s)
-            yield url, data
-            nxt = data.get(self.next_key)
-            if not nxt:
-                return
-            url = urljoin(url, nxt)
+    def _after_tail(self, url: str) -> str | None:
+        """The link a pinned (done) tail URL has grown since, or None.  The
+        tail's own records were consumed by the batch that pinned it."""
+        return self.client.next_url(url, self.client.get(url))
 
     def read(self, start: dict):
-        from urllib.parse import urljoin
-
-        fields = [f.name for f in self.schema_.fields]
         url = start["url"]
         if start.get("done"):
-            # re-probe the pinned tail once: a drained chain can grow a new
-            # `next` after later publishes; records at the tail URL itself
-            # were already consumed by the batch that pinned it
-            data = fetch_json(url, self.timeout, self.max_retries, self.backoff_s)
-            nxt = data.get(self.next_key)
-            if not nxt:
+            # a drained chain can grow a new `next` after later publishes
+            url = self._after_tail(url)
+            if url is None:
                 return iter(()), start
-            start = {"url": urljoin(url, nxt), "done": False}
-            url = start["url"]
+            start = {"url": url, "done": False}
         rows: list[tuple] = []
         last_url, last_data = url, None
-        for last_url, last_data in self._walk(url, self.pages_per_batch):
-            rows.extend(
-                tuple(rec.get(f) for f in fields)
-                for rec in last_data.get(self.results_key, [])
-            )
+        for last_url, last_data in self.client.walk(url, self.pages_per_batch):
+            rows.extend(self.client.rows(last_data))
         if last_data is None:
             return iter(()), start
-        nxt = last_data.get(self.next_key)
-        if nxt:
-            end = {"url": urljoin(last_url, nxt), "done": False}
-        else:
-            end = {"url": last_url, "done": True}
+        nxt = self.client.next_url(last_url, last_data)
+        end = {"url": nxt, "done": False} if nxt else {"url": last_url, "done": True}
         return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         """Replay [start.url, end.url) — or through end.url itself when end
         is a pinned done-offset (a done offset's records WERE consumed by
         the batch that pinned it; an open offset's belong to the next)."""
-        from urllib.parse import urljoin
-
-        fields = [f.name for f in self.schema_.fields]
         if start.get("done"):
-            # the start URL's records are consumed; replay begins at the
-            # link its tail grew afterwards (if none, nothing to replay)
+            # replay begins at the link the start's tail grew afterwards
             if start["url"] == end["url"]:
                 return
-            data = fetch_json(
-                start["url"], self.timeout, self.max_retries, self.backoff_s
-            )
-            nxt = data.get(self.next_key)
-            if not nxt:
+            begin = self._after_tail(start["url"])
+            if begin is None:
                 return
-            begin = urljoin(start["url"], nxt)
         else:
             begin = start["url"]
         if begin == end["url"] and not end.get("done"):
             return
-        for url, data in self._walk(begin, 10_000_000):
+        for url, data in self.client.walk(begin, 10_000_000):
             if not end.get("done") and url == end["url"]:
                 return
-            for rec in data.get(self.results_key, []):
-                yield tuple(rec.get(f) for f in fields)
+            yield from self.client.rows(data)
             if end.get("done") and url == end["url"]:
                 return
 
