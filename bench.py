@@ -36,7 +36,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ub_etl_spark.registry import load_all  # noqa: E402
-from ub_etl_spark.session import get_spark, release_persisted  # noqa: E402
+from ub_etl_spark.session import cpu_count, get_spark, release_persisted  # noqa: E402
 
 # Absolute-time gate: any query slower than this at sf0.1 must carry a
 # cost_note, even when its oracle is sub-floor and the ratio aggregates
@@ -142,8 +142,7 @@ def driver_line(detail: dict, detail_file: str) -> str:
     of at most DRIVER_LINE_CAP chars.  ``queries`` carries per-query
     seconds in descending order and is trimmed from the cheap end until the
     line fits, so the expensive head survives (``n_q_emitted`` says how
-    many are left); if the line is still too long with ``queries`` empty,
-    ``extra_conf`` is truncated (its full value stays in the sidecar)."""
+    many are left)."""
     line = {
         "metric": detail["metric"],
         "value": detail["value"],
@@ -182,10 +181,6 @@ def driver_line(detail: dict, detail_file: str) -> str:
         },
         "detail_file": detail_file,
     }
-    if detail.get("extra_conf"):
-        # a measurement under a session-conf override must be impossible
-        # to mistake for a convention-clean run
-        line["extra_conf"] = detail["extra_conf"]
 
     def dump() -> str:
         line["n_q_emitted"] = len(line["queries"])
@@ -194,12 +189,6 @@ def driver_line(detail: dict, detail_file: str) -> str:
     out = dump()
     while len(out) > DRIVER_LINE_CAP and line["queries"]:
         line["queries"].popitem()
-        out = dump()
-    conf = line.get("extra_conf") or ""
-    keep = len(conf)
-    while len(out) > DRIVER_LINE_CAP and keep > 0:
-        keep = max(keep - (len(out) - DRIVER_LINE_CAP) - 3, 0)
-        line["extra_conf"] = conf[:keep] + "..."
         out = dump()
     return out
 
@@ -469,10 +458,7 @@ def main() -> None:
             for n in over_abs_gate
         },
         "over_abs_gate_undocumented": over_abs_gate_undocumented,
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        # a leftover SPARK_GRAFT_EXTRA_CONF export would otherwise poison a
-        # committed measurement invisibly
-        "extra_conf": os.environ.get("SPARK_GRAFT_EXTRA_CONF") or None,
+        "cpus": cpu_count(),
     }
     with open(detail_path, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)

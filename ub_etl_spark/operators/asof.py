@@ -6,9 +6,6 @@ forward with last(ignorenulls) over a (key, time) window.  One shuffle on
 (key), no per-row Python — scales as a single sort-merge pass.  Ties
 (right.ts == left.ts) match, i.e. backward-inclusive, same as DuckDB's
 ASOF JOIN and pandas merge_asof(direction='backward', allow_exact=True).
-
-An applyInPandas variant (pd.merge_asof per key group) is provided for
-the grouped-small case; same semantics.
 """
 
 from __future__ import annotations
@@ -59,7 +56,7 @@ def asof_join(
     # every right row, so last(ignorenulls) picks the matched row atomically
     # — a legitimately-NULL value column in that row stays NULL instead of
     # being skipped in favor of an older non-null value (which would diverge
-    # from pd.merge_asof / asof_join_grouped on nullable payloads).
+    # from pd.merge_asof on nullable payloads).
     r_tag = right.select(
         *keys,
         F.col(right_ts).alias(left_ts),
@@ -181,48 +178,3 @@ def _asof_nearest(
             *[F.col(f"__asof_m.{c}").alias(c) for c in value_cols],
         )
     )
-
-
-def asof_join_grouped(
-    left: DataFrame,
-    right: DataFrame,
-    key: Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    value_cols: Sequence[str],
-) -> DataFrame:
-    """applyInPandas variant: pd.merge_asof per key group (for when each
-    group fits in memory; same backward-inclusive semantics)."""
-    import pandas as pd
-
-    keys = list(key)
-    l = left.withColumn(_SIDE, F.lit(1))
-    r = right.select(*keys, F.col(right_ts).alias("__rts"), *value_cols).withColumn(
-        _SIDE, F.lit(0)
-    )
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in left.schema.fields
-    ) + ", " + ", ".join(
-        f"{c} {right.schema[c].dataType.simpleString()}" for c in value_cols
-    )
-
-    left_cols = [f.name for f in left.schema.fields]
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        lp = pdf[pdf[_SIDE] == 1][left_cols].sort_values(left_ts)
-        rp = (
-            pdf[pdf[_SIDE] == 0][["__rts", *value_cols]]
-            .dropna(subset=["__rts"])
-            .sort_values("__rts")
-        )
-        if rp.empty:
-            for c in value_cols:
-                lp[c] = None
-            return lp
-        return pd.merge_asof(
-            lp, rp, left_on=left_ts, right_on="__rts", direction="backward"
-        ).drop(columns=["__rts"])
-
-    both = l.unionByName(r, allowMissingColumns=True)
-    return both.groupBy(*keys).applyInPandas(merge, schema=out_schema)

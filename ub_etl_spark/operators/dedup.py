@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ub_etl_spark.session import tracked_checkpoint, tracked_persist
@@ -72,23 +72,6 @@ def resolve_fk(facts: DataFrame, dim: DataFrame, natural_key: Sequence[str]) -> 
 # Shingling + fuzzy dedup
 # ---------------------------------------------------------------------------
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of a text column, as array<string>.
-
-    NOTE: built on transform(), a higher-order function, which Spark
-    evaluates *interpreted* (no whole-stage codegen).  Fine for small
-    arrays / tests; the corpus-scale path is shingle_rows() below, which
-    stays fully codegen'd.
-    """
-    toks = F.split(text, " ")
-    # guard: texts shorter than n tokens get a single shingle of the whole text
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)]),
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(F.array(text))
-
-
 def shingle_rows(
     docs: DataFrame,
     id_col: str,
@@ -103,16 +86,15 @@ def shingle_rows(
     posexplode the token array and build each n-gram with element_at on the
     retained array — plain expressions, so the whole stage (scan -> split ->
     generate -> project) compiles into one WholeStageCodegen span; no HOF
-    interpretation, no window, no shuffle.  ~10x faster than the
-    transform() formulation on the documents corpus.
+    interpretation, no window, no shuffle.  ~10x faster than a transform()
+    (higher-order function) formulation on the documents corpus.
 
-    Short texts (< n tokens) contribute the whole text as one shingle,
-    matching word_shingles() — UNLESS short_docs=False, the containment
-    family's convention (their oracle's empty generate_series drops
-    sub-n docs entirely; r12 makes this helper the single source of the
-    gram subplan for BOTH containment forms so the banded twin's
-    bit-equal-score guarantee cannot drift from the exact form's
-    tokenization).
+    Short texts (< n tokens) contribute the whole text as one shingle —
+    UNLESS short_docs=False, the containment family's convention (their
+    oracle's empty generate_series drops sub-n docs entirely; r12 makes
+    this helper the single source of the gram subplan for BOTH containment
+    forms so the banded twin's bit-equal-score guarantee cannot drift from
+    the exact form's tokenization).
 
     distinct=False skips the (doc_id, shingle) dedup shuffle — for
     consumers whose downstream aggregate is duplicate-insensitive (min)

@@ -24,8 +24,6 @@ def cpu_count() -> int:
 def get_spark(
     app_name: str = "ub_etl_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
-    driver_memory: str | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
@@ -44,7 +42,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
+        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # r15 (optimization guide §2): parallelismFirst=true is the UPSTREAM
@@ -85,61 +83,19 @@ def get_spark(
         # inside the checkout: a checkout path longer than ~28 characters
         # would pass the 108-byte AF_UNIX limit and fail every Python task.
         .config("spark.sql.parquet.filterPushdown", "true")
-        # TIMESTAMP(NANOS) parquet columns (events.ts) read as bigint nanos
-        # session-wide instead of erroring in the vectorized reader.  Set here
-        # ONCE, explicitly: flipping it inside a loader would silently change
-        # how every later parquet read in the shared session interprets nanos
-        # columns.  sources/tables.load_table converts nanos->timestamp.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
     )
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
-    # SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — override any session conf from the
-    # environment without code changes.  Exists for independence sweeps
-    # (e.g. full parity with spark.sql.adaptive.enabled=false certifies
-    # results don't depend on AQE replanning); overrides apply AFTER the
-    # defaults and the caller's extra, so they always win.  Caveats:
-    # getOrCreate() ignores builder configs when a session already exists
-    # in-process, so the override only binds on the FIRST get_spark of a
-    # process (all the sweep tools build theirs first); and bench.py
-    # records the variable in its artifacts so a leftover export can
-    # never pass as a convention-clean measurement.
-    for pair in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";")):
-        k, sep, v = pair.partition("=")
-        if not sep:
-            # a typo'd segment ("k;false") would otherwise set key="" and
-            # silently invalidate a whole sweep (ADVICE r14)
-            raise ValueError(
-                f"SPARK_GRAFT_EXTRA_CONF segment {pair!r} has no '=' — "
-                "expected k=v;k=v"
-            )
-        builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
 def refuse_extra_conf(tool: str) -> None:
-    """Refuse to write committed evidence under a sweep conf override.
-
-    bench.py AUDITS SPARK_GRAFT_EXTRA_CONF into its artifacts, but the
-    committed-evidence writers that ratchet cross-session minima
-    (tools/sf1_bench.py -> sf1_bench.json) or pin bounds
-    (tools/bounds.py -> BOUNDS.json) have no per-row audit surface — a
-    leftover sweep export would poison those measurements invisibly
-    (ADVICE r14).  They call this at startup and record extra_conf=None
-    in the artifact so the checked-ness is itself visible.
-    """
-    val = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
-    if val:
-        raise SystemExit(
-            f"{tool}: SPARK_GRAFT_EXTRA_CONF={val!r} is set — refusing to "
-            "write committed evidence under a non-default session conf. "
-            "Unset it; runtime sweeps go through bench.py/tools/parity.py, "
-            "which audit the override into their artifacts."
-        )
+    """No-op, kept because an existing caller imports it: get_spark reads
+    no conf override from the environment, so there is nothing to refuse."""
 
 
 # ---------------------------------------------------------------------------

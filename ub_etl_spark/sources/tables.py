@@ -11,7 +11,6 @@ from __future__ import annotations
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 TABLES = [
     "region",
@@ -43,33 +42,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = per_session.get((sf_dir, name))
     if hit is not None:
         return hit
-    df = _load_table_uncached(spark, sf_dir, name)
+    # events.parquet stores TIMESTAMP(NANOS); Spark 4.1 reads it natively as
+    # TIMESTAMP_NTZ (nanos truncated to micros), so every table is a plain read.
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     per_session[(sf_dir, name)] = df
     return df
-
-
-def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS).  Spark 4.1 reads it
-        # natively as TIMESTAMP_NTZ (nanos truncated to micros), in which
-        # case no conversion is needed here — queries treat ts as NTZ and
-        # any epoch extraction casts explicitly (see streaming_batch.py).
-        # Older readers reject NANOS unless nanosAsLong=true, so keep that
-        # legacy fallback: read as bigint nanos and rebuild the timestamp.
-        # NOTE the conf is deliberately a permanent, documented session
-        # property — not scoped/restored — because it is consulted again at
-        # scan *execution*, after this function returns.
-        if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
